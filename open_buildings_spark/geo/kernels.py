@@ -379,10 +379,12 @@ def rects_in_interior(
 
 def rings_rect(rings: list[tuple[np.ndarray, bool]]):
     """(w, s, e, n) when the ring list is exactly one closed 5-vertex
-    axis-aligned rectangle shell (vertices on distinct bbox corners, one
-    coordinate changing per step, positive extent), else None. Rectangles
-    are the dominant real-world query polygon (tiles, bboxes, country/city
-    rect fixtures); several kernels special-case them."""
+    axis-aligned rectangle shell (the four vertices are the four distinct
+    bbox corners, one coordinate changing per step, positive extent), else
+    None. Rectangles are the dominant real-world query polygon (tiles,
+    bboxes, country/city rect fixtures); several kernels special-case
+    them. Corner-only checks are not enough: the zero-area back-and-forth
+    ring ``(0 0, 2 0, 2 1, 2 0, 0 0)`` visits three corners, one twice."""
     if len(rings) != 1 or rings[0][1]:
         return None
     c = np.asarray(rings[0][0], dtype=np.float64)
@@ -391,8 +393,9 @@ def rings_rect(rings: list[tuple[np.ndarray, bool]]):
     x, y = c[:4, 0], c[:4, 1]
     w, e, s, n = x.min(), x.max(), y.min(), y.max()
     corner = bool(np.all(((x == w) | (x == e)) & ((y == s) | (y == n))))
+    distinct = len({tuple(v) for v in c[:4].tolist()}) == 4
     onemove = bool(np.all((c[1:, 0] != c[:4, 0]) ^ (c[1:, 1] != c[:4, 1])))
-    if corner and onemove and w < e and s < n:
+    if corner and distinct and onemove and w < e and s < n:
         return float(w), float(s), float(e), float(n)
     return None
 

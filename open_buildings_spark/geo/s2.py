@@ -1,7 +1,6 @@
 """Vectorized S2 cell index (public S2 geometry scheme) — the second cell
-provider next to the Bing quadkey (`geo/mercator.py`) and the gated H3
-provider (`geo/cells.py`), giving the engine the "H3/S2 index with quadkey
-fallback" surface. Pure numpy, batch-at-a-time; no S2 library exists in
+provider next to the Bing quadkey (`geo/mercator.py`), giving the engine
+the "H3/S2 index with quadkey fallback" surface. Pure numpy, batch-at-a-time; no S2 library exists in
 this container, so the bit layout follows the published scheme (cube-face
 projection, quadratic ST transform, Hilbert curve position, trailing
 sentinel bit) and is pinned by structural invariants in

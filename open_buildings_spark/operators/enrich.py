@@ -206,14 +206,14 @@ def add_s2_cell(
     lat_col: str = "lat",
     out_col: str = "s2_cell",
 ) -> DataFrame:
-    """S2 cell id of each row's centroid, as a third cell-index surface next
-    to the quadkey (reference scheme, overture/add_columns.py:40-47) and the
-    gated H3 provider (geo/cells.py) — the north-star's "H3/S2 index with
-    quadkey fallback". Runs after :func:`add_geo_columns` (which provides
-    centroid lon/lat from one WKT parse pass); the S2 step itself crosses
-    the Python boundary with just two doubles per row. Ids are int64 in the
-    public S2 bit layout, so parent containment is the native range
-    predicate ``id BETWEEN range_min(parent) AND range_max(parent)`` — at
+    """S2 cell id of each row's centroid, as a second cell-index surface next
+    to the quadkey (reference scheme, overture/add_columns.py:40-47) — the
+    north-star's "H3/S2 index with quadkey fallback". Runs after
+    :func:`add_geo_columns` (which provides centroid lon/lat from one WKT
+    parse pass); the S2 step itself crosses the Python boundary with just
+    two doubles per row. Ids are int64 in the public S2 bit layout, so
+    parent containment is the native range predicate
+    ``id BETWEEN range_min(parent) AND range_max(parent)`` — at
     100 TB that means range-joins and range-partitioned file layouts prune
     on a sorted numeric column instead of string prefixes."""
     from ..udfs import make_s2_cell

@@ -693,43 +693,59 @@ def write_gpkg(
         # SQLite executes the current multi-row INSERTs: executemany and
         # the arrow decode both release the GIL, so the single-writer
         # funnel overlaps its python prep with its C execution
-        from queue import Queue
-        from threading import Thread
+        from queue import Full, Queue
+        from threading import Event, Thread
 
         _q: Queue = Queue(maxsize=2)
+        _stop = Event()
+
+        def _put(item) -> bool:
+            # bounded waits: a consumer that died (insert error) sets
+            # _stop, and the reader must not block on a full queue forever
+            while not _stop.is_set():
+                try:
+                    _q.put(item, timeout=0.05)
+                    return True
+                except Full:
+                    pass
+            return False
 
         def _reader():
             try:
                 for rb in ds.to_batches():
-                    _q.put(("b", _prep(rb)))
+                    if not _put(("b", _prep(rb))):
+                        return
             except BaseException as ex:  # surfaced in the consumer loop
-                _q.put(("e", ex))
+                _put(("e", ex))
             else:
-                _q.put(("end", None))
+                _put(("end", None))
 
         _t_rd = Thread(target=_reader, daemon=True)
         _t_rd.start()
-        while True:
-            kind, payload = _q.get()
-            if kind == "end":
-                break
-            if kind == "e":
-                raise payload
-            rows, gtypes_np, bx0, by0, bx1, by1, hk = payload
-            seen_types.update(int(t) for t in np.unique(gtypes_np))
-            if rows:
-                _bulk_insert(db, insert_frag, rows)
-                if rt is not None:
-                    rtree_bbs.append(
-                        np.stack([bx0, by0, bx1, by1], axis=1)
-                    )
-                    rtree_hks.append(hk)
-                n += len(rows)
-                gminx = min(gminx, float(bx0.min()))
-                gminy = min(gminy, float(by0.min()))
-                gmaxx = max(gmaxx, float(bx1.max()))
-                gmaxy = max(gmaxy, float(by1.max()))
-        _t_rd.join()
+        try:
+            while True:
+                kind, payload = _q.get()
+                if kind == "end":
+                    break
+                if kind == "e":
+                    raise payload
+                rows, gtypes_np, bx0, by0, bx1, by1, hk = payload
+                seen_types.update(int(t) for t in np.unique(gtypes_np))
+                if rows:
+                    _bulk_insert(db, insert_frag, rows)
+                    if rt is not None:
+                        rtree_bbs.append(
+                            np.stack([bx0, by0, bx1, by1], axis=1)
+                        )
+                        rtree_hks.append(hk)
+                    n += len(rows)
+                    gminx = min(gminx, float(bx0.min()))
+                    gminy = min(gminy, float(by0.min()))
+                    gmaxx = max(gmaxx, float(bx1.max()))
+                    gmaxy = max(gmaxy, float(by1.max()))
+        finally:
+            _stop.set()
+            _t_rd.join()
         if rt is not None and rtree_bbs:
             _rtree_bulk_load(
                 db, rt, np.arange(1, n + 1, dtype=np.int64),
@@ -758,6 +774,7 @@ def write_gpkg(
         db.close()
         if os.path.exists(tmp):
             os.remove(tmp)  # never leak a multi-GB hidden .inprogress file
+        shutil.rmtree(scratch, ignore_errors=True)
         raise
     else:
         db.close()

@@ -23,6 +23,7 @@ same single-file funnel GDAL pays). Reader for round-trips/interop.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import struct
 
@@ -484,9 +485,12 @@ def write_shp(df, path: str, wkt_col: str = "wkt") -> int:
             for i, (cn, (_, ftype, flen, fdec)) in enumerate(
                 zip(col_names, fields)
             ):
-                rec_arr[f"f{i}"] = _dbf_column(
-                    pdf[cn].iloc[keep].reset_index(drop=True), ftype, flen, fdec
-                )
+                try:
+                    rec_arr[f"f{i}"] = _dbf_column(
+                        pdf[cn].iloc[keep].reset_index(drop=True), ftype, flen, fdec
+                    )
+                except ValueError as ex:
+                    raise ValueError(f"DBF column {cn!r}: {ex}") from None
             stypes = ",".join(str(t) for t in sorted(set(types)))
             yield pa.record_batch(
                 [
@@ -510,7 +514,16 @@ def write_shp(df, path: str, wkt_col: str = "wkt") -> int:
         "__obs_stypes string, __obs_minx double, __obs_miny double, "
         "__obs_maxx double, __obs_maxy double"
     )
-    df.mapInArrow(enc, out_schema).write.mode("overwrite").parquet(scratch)
+    try:
+        df.mapInArrow(enc, out_schema).write.mode("overwrite").parquet(scratch)
+    except Exception as ex:
+        shutil.rmtree(scratch, ignore_errors=True)
+        # an executor-side DBF overflow arrives wrapped in a Spark task
+        # failure: surface the clean ValueError it is
+        hit = re.search(r"ValueError: (DBF column [^\n]*)", str(ex))
+        if hit is None:
+            raise
+        raise ValueError(hit.group(1)) from None
 
     ds = pads.dataset(scratch, format="parquet")
     shp_records = bytearray()

@@ -4,9 +4,17 @@ No Iceberg jar exists in this sandbox, so the engine implements the subset of
 Iceberg semantics the north_rule needs, over plain ``spark.read/write.parquet``:
 
 - **snapshots**: ``metadata/v{N}.json`` manifests, each listing data files
-  with per-file partition values, row counts and quadkey bounds;
-- **atomic commit**: manifest written to a temp file then ``os.replace``'d,
-  then the ``VERSION`` pointer swapped the same way (single-writer);
+  with per-file partition values and row counts, plus the ``operation``
+  that made it (what changed is the diff against ``parent_id``);
+- **optimistic concurrency**: every writer commits through :func:`_commit`,
+  which creates ``v{N+1}.json`` only if it does not exist yet. Concurrent
+  writers are safe: a writer that loses the race for ``v{N+1}`` re-applies
+  its per-cell diff on the new head when none of the cells it touches
+  changed there (disjoint-cell writers both land), and raises
+  :class:`CommitConflictError` naming the cells when they overlap.
+  ``VERSION`` is only a hint; readers step forward to the newest manifest.
+  :func:`expire_snapshots` must NOT run beside an in-flight writer: it
+  deletes data files that no snapshot references yet;
 - **partition pruning**: readers plan the file list from the manifest
   (quadkey-prefix and key-equality predicates) before Spark ever lists
   a directory — the reference gets this from hive partitioning + quadkey
@@ -25,9 +33,16 @@ import glob
 import json
 import os
 import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+class CommitConflictError(RuntimeError):
+    """A concurrent commit changed cells (or the schema) that this commit
+    also changes; nothing was committed — re-read the table and retry."""
 
 
 def _meta_dir(root: str) -> str:
@@ -38,39 +53,137 @@ def _version_file(root: str) -> str:
     return os.path.join(_meta_dir(root), "VERSION")
 
 
+def _manifest_path(root: str, snapshot_id: int) -> str:
+    return os.path.join(_meta_dir(root), f"v{snapshot_id}.json")
+
+
+def _newest_from(root: str, snapshot_id: int) -> int:
+    while os.path.exists(_manifest_path(root, snapshot_id + 1)):
+        snapshot_id += 1
+    return snapshot_id
+
+
 def current_manifest(root: str) -> dict | None:
-    vf = _version_file(root)
-    if not os.path.exists(vf):
-        return None
-    with open(vf) as f:
-        v = f.read().strip()
-    with open(os.path.join(_meta_dir(root), v)) as f:
-        return json.load(f)
+    """The newest committed snapshot. ``VERSION`` is a hint: a crash between
+    publishing ``v{N+1}.json`` and the pointer swap, or two swaps landing
+    out of order, leaves it behind, so step forward while the next
+    manifest exists."""
+    try:
+        with open(_version_file(root)) as f:
+            hint = int(f.read().strip()[1 : -len(".json")])
+    except FileNotFoundError:
+        hint = 0
+    sid = _newest_from(root, hint)
+    return manifest_at(root, sid) if sid else None
 
 
-def _commit_manifest(root: str, manifest: dict) -> None:
-    """Atomic: temp-write manifest, rename, then swap the VERSION pointer."""
+def _set_version(root: str, snapshot_id: int) -> None:
+    fd, tmp = tempfile.mkstemp(prefix=".VERSION.", suffix=".tmp", dir=_meta_dir(root))
+    with os.fdopen(fd, "w") as f:
+        f.write(f"v{snapshot_id}.json")
+    os.replace(tmp, _version_file(root))
+
+
+def _head(root: str, snapshot_id: int | None = None) -> dict:
+    """The current (or ``snapshot_id``'s) manifest; FileNotFoundError when
+    there is none."""
+    m = current_manifest(root) if snapshot_id is None else manifest_at(root, snapshot_id)
+    if m is None:
+        raise FileNotFoundError(
+            f"no committed snapshot at {root}"
+            + (f" (snapshot {snapshot_id})" if snapshot_id is not None else "")
+        )
+    return m
+
+
+def _cell_name(ck: tuple, keys: list[str]) -> str:
+    """A partition's hive path (keyed tables: the bare cell string would
+    collide across key values) or bare cell."""
+    if not keys:
+        return ck[-1]
+    return "/".join([f"{k}={v}" for k, v in zip(keys, ck)] + [f"cell={ck[-1]}"])
+
+
+def _overlap(a: tuple, b: tuple) -> bool:
+    """Same key values and one cell a prefix of (or equal to) the other."""
+    return a[:-1] == b[:-1] and (a[-1].startswith(b[-1]) or b[-1].startswith(a[-1]))
+
+
+def _commit(
+    root: str,
+    base: dict,
+    op: str,
+    changes: dict,
+    update_metrics,
+    schema=None,
+) -> dict:
+    """The one way a snapshot is made. On top of the head, apply
+    ``changes`` — the per-cell diff against ``base``: ``(key values...,
+    cell) -> new partition entry``, or ``None`` to drop the cell — plus
+    ``update_metrics`` (head metrics -> new metrics) and ``schema`` (head
+    schema -> new schema; None keeps it), and publish the result as
+    ``v{N+1}.json``. Returns the committed manifest.
+
+    Optimistic concurrency (Iceberg spec): the manifest goes to a unique
+    temp file that is hard-linked to its final name, so publishing is
+    atomic and create-if-absent — EEXIST means another writer won
+    ``v{N+1}``. The loser steps forward to the real head; if no cell it
+    touches overlaps a partition that changed between ``base`` and the
+    head, it re-applies its diff there, otherwise it raises
+    :class:`CommitConflictError` naming the cells. The ``VERSION`` swap
+    comes last and is only a hint (:func:`current_manifest`)."""
+    keys = _manifest_keys(base)
     os.makedirs(_meta_dir(root), exist_ok=True)
-    name = f"v{manifest['snapshot_id']}.json"
-    tmp = os.path.join(_meta_dir(root), f".{name}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(_meta_dir(root), name))
-    vtmp = _version_file(root) + ".tmp"
-    with open(vtmp, "w") as f:
-        f.write(name)
-    os.replace(vtmp, _version_file(root))
+    head = base
+    while True:
+        parts = {_part_key(p, keys): p for p in head["partitions"]}
+        for ck, part in changes.items():
+            if part is None:
+                parts.pop(ck, None)
+            else:
+                parts[ck] = part
+        parent = head.get("snapshot_id", 0)  # 0: the table's first commit
+        sid = parent + 1
+        m = {
+            "snapshot_id": sid,
+            "parent_id": parent,
+            "operation": op,
+            "keys": keys,
+            "partitions": [parts[ck] for ck in sorted(parts)],
+            "metrics": update_metrics(dict(head["metrics"])),
+        }
+        new_schema = schema(head.get("schema")) if schema else head.get("schema")
+        if new_schema is not None:
+            m["schema"] = new_schema
+        fd, tmp = tempfile.mkstemp(prefix=f".v{sid}.", suffix=".tmp", dir=_meta_dir(root))
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(m, f, indent=1, sort_keys=True)
+            os.link(tmp, _manifest_path(root, sid))
+            break
+        except FileExistsError:
+            head = manifest_at(root, _newest_from(root, sid))
+            old = {_part_key(p, keys): p for p in base["partitions"]}
+            new = {_part_key(p, keys): p for p in head["partitions"]}
+            moved = [ck for ck in old.keys() | new.keys() if old.get(ck) != new.get(ck)]
+            clash = sorted(ck for ck in changes if any(_overlap(ck, mv) for mv in moved))
+            if clash or _manifest_keys(head) != keys:
+                raise CommitConflictError(
+                    f"{op} on {root} conflicts with a concurrent commit "
+                    f"(snapshot {base.get('snapshot_id', 0)} -> {head['snapshot_id']}) "
+                    f"on cells {[_cell_name(ck, keys) for ck in clash]}"
+                ) from None
+        finally:
+            os.remove(tmp)
+    _set_version(root, sid)
+    return m
 
 
 def committed_cells(root: str, keys: list[str] | None = None) -> set:
     m = current_manifest(root)
     if m is None:
         return set()
-    keys = keys or []
-    out = set()
-    for part in m["partitions"]:
-        out.add(tuple(part["values"].get(k) for k in keys) + (part["cell"],))
-    return out
+    return {_part_key(p, keys or []) for p in m["partitions"]}
 
 
 def _manifest_keys(m: dict) -> list[str]:
@@ -95,6 +208,28 @@ def _part_dir(data_dir: str, keys: list[str], values: dict, cell: str) -> str:
 
 def _part_key(part: dict, keys: list[str]) -> tuple:
     return tuple(part["values"].get(k) for k in keys) + (part["cell"],)
+
+
+def _row_key(row, keys: list[str]) -> tuple:
+    return tuple(row[k] for k in keys) + (row["cell"],)
+
+
+def _cell_counts(df: DataFrame, keys: list[str]) -> dict:
+    """Rows per (key values..., cell) of a cell-tagged frame."""
+    return {
+        _row_key(r, keys): r["n"]
+        for r in df.groupBy(*keys, "cell").agg(F.count("*").alias("n")).collect()
+    }
+
+
+def _cells_df(spark: SparkSession, parts: list[dict], keys: list[str]) -> DataFrame:
+    return spark.createDataFrame([_part_key(p, keys) for p in parts], _plan_schema(keys))
+
+
+def _cap(m: dict, override: int | None) -> int | None:
+    """Per-file row cap: the caller's override, else the writer's stored
+    ``max_per_file``."""
+    return override if override is not None else m["metrics"].get("max_per_file")
 
 
 def _rows_per_file(
@@ -134,33 +269,94 @@ def _rows_per_file(
     return [pq.ParquetFile(p).metadata.num_rows for p in paths]
 
 
-def _keyed_reader(spark: SparkSession, m: dict, keys: list[str], root: str):
-    """Reader for a KEYED table's files: explicit schema with the key
-    columns (and ``cell``) as strings plus ``basePath``, so Spark recovers
-    the hive-directory values verbatim — inference would coerce '0300' to
-    the integer 300. Caller must ``.drop('cell')``."""
-    if not m.get("schema"):
-        raise ValueError(
-            f"keyed table at {root} has no stored schema; rewrite it"
-        )
-    from pyspark.sql.types import StringType, StructField, StructType
+def _write_cells(
+    spark: SparkSession,
+    root: str,
+    keys: list[str],
+    counts: dict,
+    write,
+    extend: dict | None = None,
+) -> tuple[dict, list[str]]:
+    """Run ``write()`` — one Spark job appending parquet files under the
+    hive directories of the cells in ``counts`` ((key values..., cell) ->
+    rows written there) — and return ``(changes, new_paths)`` for
+    :func:`_commit`.
 
-    fields = [
-        f for f in _schema_struct(m).fields if f.name not in keys
-    ] + [StructField(k, StringType(), True) for k in keys] + [
-        StructField("cell", StringType(), True)
-    ]
-    return spark.read.schema(StructType(fields)).option(
-        "basePath", os.path.join(root, "data")
-    )
+    Snapshot immutability: files are only ever ADDED (append mode +
+    job-unique part names) and a cell's new files are the diff of its
+    directory across the job, so files of an earlier KILLED (uncommitted)
+    attempt are never referenced — they sit orphaned until
+    :func:`expire_snapshots` reclaims them, and every older snapshot keeps
+    reading exactly the files it committed. The footer row counts come from
+    ONE batched :func:`_rows_per_file` pass (never per-cell serial reads).
+
+    ``extend`` maps cells whose existing entry the new files join
+    (appends); a pre-r4 entry without ``file_rows`` is backfilled in the
+    same pass. Every other cell's entry is replaced by just its new files,
+    and a cell left with zero rows drops (``None``)."""
+    extend = extend or {}
+    data_dir = os.path.join(root, "data")
+    dirs = {ck: _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]) for ck in counts}
+
+    def listing() -> dict:
+        return {ck: set(glob.glob(os.path.join(d, "*.parquet"))) for ck, d in dirs.items()}
+
+    before = listing()
+    write()
+    new = {ck: sorted(fs - before[ck]) for ck, fs in listing().items()}
+    backfill = {
+        ck: [os.path.join(root, f) for f in p["files"]]
+        for ck, p in extend.items()
+        if p.get("file_rows") is None
+    }
+    new_paths = [p for fl in new.values() for p in fl]
+    it = iter(_rows_per_file(new_paths + [p for fl in backfill.values() for p in fl], spark))
+    frows = {ck: [next(it) for _ in fl] for ck, fl in new.items()}
+    old_frows = {ck: [next(it) for _ in fl] for ck, fl in backfill.items()}
+    changes: dict = {}
+    for ck, n in counts.items():
+        rel = [os.path.relpath(p, root) for p in new[ck]]
+        prior = extend.get(ck)
+        if prior is not None:
+            changes[ck] = {
+                **prior,
+                "files": prior["files"] + rel,
+                "file_rows": old_frows.get(ck, prior.get("file_rows")) + frows[ck],
+                "n_rows": prior["n_rows"] + n,
+            }
+        elif n:
+            changes[ck] = {
+                "cell": ck[-1],
+                "values": dict(zip(keys, ck)),
+                "n_rows": n,
+                "files": rel,
+                "file_rows": frows[ck],
+            }
+        else:
+            changes[ck] = None  # every row of this cell moved or was deleted
+    return changes, new_paths
+
+
+def _offset_bump(spark: SparkSession, base: dict, paths: list[str]):
+    """Metrics step keeping the kNN exactness bound current: a stored
+    ``max_anchor_offset_m`` becomes its max with the offset of just the
+    new files (one column-pruned scan)."""
+    if "max_anchor_offset_m" not in base["metrics"] or not paths:
+        return lambda mm: mm
+    from ..operators.knn import corpus_anchor_offset_m
+
+    off = corpus_anchor_offset_m(spark.read.parquet(*paths))
+    return lambda mm: {
+        **mm, "max_anchor_offset_m": max(mm.get("max_anchor_offset_m", off), off)
+    }
 
 
 def _check_key_types(df: DataFrame, keys: list[str]) -> None:
     """Partition key columns must be STRING-typed: the hive layout stores
-    key values as directory-name text and :func:`_keyed_reader` recovers
-    them as strings verbatim, so a non-string key column would silently
-    change type on read and then type-clash (or coerce) when a later
-    merge unions recovered survivors with a batch. Refuse up front."""
+    key values as directory-name text and :func:`_scan` recovers them as
+    strings verbatim, so a non-string key column would silently change
+    type on read and then type-clash (or coerce) when a later merge
+    unions recovered survivors with a batch. Refuse up front."""
     bad = [
         f"{f.name} ({f.dataType.simpleString()})"
         for f in df.schema.fields
@@ -172,6 +368,24 @@ def _check_key_types(df: DataFrame, keys: list[str]) -> None:
             f"values read back as strings): cast {', '.join(bad)} to "
             "string first"
         )
+
+
+def _check_batch(m: dict, df: DataFrame, keys: list[str], verb: str) -> None:
+    """An append/upsert batch must fit the table schema and carry the
+    (string-typed) partition key columns."""
+    if m.get("schema"):
+        extra = set(df.columns) - {f["name"] for f in m["schema"]} - set(keys)
+        if extra:
+            raise ValueError(
+                f"{verb} columns {sorted(extra)} not in table schema; "
+                f"add_column first"
+            )
+    missing = set(keys) - set(df.columns)
+    if missing:
+        raise ValueError(
+            f"{verb} batch missing partition key columns {sorted(missing)}"
+        )
+    _check_key_types(df, keys)
 
 
 def write_partitioned(
@@ -201,23 +415,14 @@ def write_partitioned(
     ``last_append_batch_id`` — atomically with the data becoming visible.
     Returns the final manifest.
     """
-    from ..operators.partition import partition_plan
+    from ..operators.partition import partition_plan, tag_cells
 
     keys = keys or []
-    if keys:
-        _check_key_types(df, keys)
+    _check_key_types(df, keys)
     plan = partition_plan(df, max_per_file, keys).collect()
-    done = committed_cells(root, keys)
-    pending = [
-        r
-        for r in plan
-        if (tuple(r[k] for k in keys) + (r["cell"],)) not in done
-    ]
     m = current_manifest(root)
     if m is None:
         m = {
-            "snapshot_id": 0,
-            "parent_id": None,
             "keys": keys,
             "partitions": [],
             "metrics": {"rows_written": 0, "recomputed_cells": 0},
@@ -227,7 +432,8 @@ def write_partitioned(
             f"table at {root} is partitioned by {_manifest_keys(m)}, "
             f"not {keys}"
         )
-
+    done = {_part_key(p, keys) for p in m["partitions"]}
+    pending = [r for r in plan if _row_key(r, keys) not in done]
     if not pending:
         return m
 
@@ -241,17 +447,15 @@ def write_partitioned(
     )
     data_dir = os.path.join(root, "data")
     os.makedirs(data_dir, exist_ok=True)
-    commits = 0
     # per-snapshot schema (data files only: partition key columns and the
     # cell live in directory names) — the schema-evolution anchor
     data_schema = [
         f.jsonValue() for f in df.schema.fields if f.name not in keys
     ]
-    from ..operators.partition import tag_cells
-
     spark = df.sparkSession
     plan_schema = _plan_schema(keys, ", n_rows long")
-    for group in groups:
+    for commits, group in enumerate(groups, 1):
+        final = commits == len(groups)
         # Tag rows with their leaf cell via a broadcast hash equi-join on
         # quadkey-prefix = cell (tag_cells). The inner join doubles as the
         # pending-cells filter: rows of already-committed cells match no
@@ -279,19 +483,6 @@ def write_partitioned(
                 F.pmod(F.hash(F.col("doc_id")), shards),
             ).otherwise(F.lit(0)),
         ).drop("n_rows")
-        # snapshot immutability: files are only ever ADDED (append mode +
-        # job-unique part names); the manifest's per-cell file list is the
-        # diff of the cell dir across the job, so files from an earlier
-        # KILLED (uncommitted) attempt are never referenced — they sit
-        # orphaned until expire_snapshots reclaims them, and every older
-        # snapshot keeps reading exactly the files it committed.
-        pre_files: dict[str, set] = {}
-        for r in group:
-            part_dir = data_dir
-            for k in keys:
-                part_dir = os.path.join(part_dir, f"{k}={r[k]}")
-            part_dir = os.path.join(part_dir, f"cell={r['cell']}")
-            pre_files[part_dir] = set(glob.glob(os.path.join(part_dir, "*.parquet")))
         # explicit partition count: ceil(rows/max_per_file) writer tasks at
         # minimum — an explicit repartition(n, ...) is exempt from AQE
         # partition coalescing, which would otherwise merge the salt shards
@@ -299,8 +490,9 @@ def write_partitioned(
         shuffle_parts = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        n_writers = max(shuffle_parts, -(-sum(r["n_rows"] for r in group) // max_per_file))
-        (
+        n_rows = sum(r["n_rows"] for r in group)
+        n_writers = max(shuffle_parts, -(-n_rows // max_per_file))
+        write = (
             sub.repartition(
                 n_writers, F.col("cell"), F.col("_salt"), *[F.col(k) for k in keys]
             )
@@ -318,58 +510,20 @@ def write_partitioned(
             .write.mode("append")
             .partitionBy(*keys, "cell")
             .option("compression", "snappy")
-            .parquet(data_dir)
         )
-        group_files: list[list[str]] = []
-        for r in group:
-            part_dir = data_dir
-            for k in keys:
-                part_dir = os.path.join(part_dir, f"{k}={r[k]}")
-            part_dir = os.path.join(part_dir, f"cell={r['cell']}")
-            group_files.append(
-                sorted(
-                    set(glob.glob(os.path.join(part_dir, "*.parquet")))
-                    - pre_files[part_dir]
-                )
-            )
-        # one batched footer pass for the whole commit group (fans out as
-        # a Spark job when the group wrote many files)
-        flat = [p for fl in group_files for p in fl]
-        flat_rows = iter(_rows_per_file(flat, spark))
-        new_parts = []
-        for r, files in zip(group, group_files):
-            new_parts.append(
-                {
-                    "cell": r["cell"],
-                    "values": {k: r[k] for k in keys},
-                    "n_rows": r["n_rows"],
-                    "files": [os.path.relpath(p, root) for p in files],
-                    "file_rows": [next(flat_rows) for _ in files],
-                }
-            )
-        is_final_group = group is groups[-1]
-        m = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "keys": keys,
-            "schema": data_schema,
-            "partitions": m["partitions"] + new_parts,
-            "metrics": {
-                **m["metrics"],
-                "rows_written": m["metrics"]["rows_written"]
-                + sum(r["n_rows"] for r in group),
-                "recomputed_cells": m["metrics"]["recomputed_cells"] + len(group),
-                "max_per_file": max_per_file,
-                # final commit only: a partially-committed build must not
-                # carry caller bookkeeping that marks it complete
-                **(extra_metrics if is_final_group and extra_metrics else {}),
-            },
-        }
-        if is_final_group and store_anchor_offset:
+        changes, new_paths = _write_cells(
+            spark,
+            root,
+            keys,
+            {_row_key(r, keys): r["n_rows"] for r in group},
+            lambda: write.parquet(data_dir),
+        )
+        final_metrics = dict(extra_metrics or {}) if final else {}
+        if final and store_anchor_offset:
             data_cols = set(df.columns) - set(keys) - {"cell"}
             files = [
                 os.path.join(root, f) for p in m["partitions"] for f in p["files"]
-            ]
+            ] + new_paths
             if {"quadkey", "lon", "lat"} <= data_cols and files:
                 # kNN exactness metric (corpus_anchor_offset_m): one
                 # column-pruned scan of the written files, FOLDED INTO the
@@ -379,11 +533,36 @@ def write_partitioned(
                 # permanently missing the metric)
                 from ..operators.knn import corpus_anchor_offset_m
 
-                m["metrics"]["max_anchor_offset_m"] = corpus_anchor_offset_m(
+                final_metrics["max_anchor_offset_m"] = corpus_anchor_offset_m(
                     spark.read.parquet(*files)
                 )
-        _commit_manifest(root, m)
-        commits += 1
+        base_schema = m.get("schema")
+
+        def build_schema(cur):
+            # a concurrent add_column since the base would be silently
+            # replaced by this build's schema: refuse instead
+            if cur not in (base_schema, data_schema):
+                raise CommitConflictError(
+                    f"write on {root} conflicts with a concurrent schema change"
+                )
+            return data_schema
+
+        m = _commit(
+            root,
+            m,
+            "write",
+            changes,
+            lambda mm: {
+                **mm,
+                "rows_written": mm["rows_written"] + n_rows,
+                "recomputed_cells": mm["recomputed_cells"] + len(group),
+                "max_per_file": max_per_file,
+                # final commit only: a partially-committed build must not
+                # carry caller bookkeeping that marks it complete
+                **final_metrics,
+            },
+            schema=build_schema,
+        )
         if fail_after_commits >= 0 and commits >= fail_after_commits:
             raise RuntimeError(f"injected failure after {commits} commits")
     return m
@@ -424,7 +603,9 @@ def append_rows(
     names, pre/post directory diff per touched cell), the manifest diff is
     per-cell ``files`` + ``n_rows``, and older snapshots keep reading
     exactly their own files. Fragmentation from many micro-batches is
-    reclaimed by :func:`compact_cells`.
+    reclaimed by :func:`compact_cells`. An append racing another writer
+    (e.g. compaction) lands when the cells it touches did not change
+    under it and raises :class:`CommitConflictError` otherwise.
 
     ``batch_id`` makes replays idempotent (exactly-once for a single
     streaming writer): if ``batch_id <= metrics['last_append_batch_id']``
@@ -435,46 +616,20 @@ def append_rows(
     """
     from ..operators.partition import tag_cells
 
-    m = current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    m = _head(root)
     keys = _manifest_keys(m)
     last = m["metrics"].get("last_append_batch_id")
     if batch_id is not None and last is not None and batch_id <= last:
         return m  # replayed micro-batch: already committed
-    if m.get("schema"):
-        allowed = {f["name"] for f in m["schema"]} | set(keys)
-        extra = set(df.columns) - allowed
-        if extra:
-            raise ValueError(
-                f"append columns {sorted(extra)} not in table schema; "
-                f"add_column first"
-            )
-    missing = set(keys) - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"append batch missing partition key columns {sorted(missing)}"
-        )
-    if keys:
-        _check_key_types(df, keys)
-    cap = (
-        max_per_file
-        if max_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
+    _check_batch(m, df, keys, "append")
+    cap = _cap(m, max_per_file)
     spark = df.sparkSession
-    data_dir = os.path.join(root, "data")
 
     _, plan = _routing_plan(spark, m, df, keys)
     tagged = tag_cells(df, plan, keys).persist()
     try:
         n_batch = df.count()
-        counts = {
-            tuple(r[k] for k in keys) + (r["cell"],): r["n"]
-            for r in tagged.groupBy(*keys, "cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+        counts = _cell_counts(tagged, keys)
         if sum(counts.values()) != n_batch:
             raise ValueError(
                 f"{n_batch - sum(counts.values())} append rows have a NULL "
@@ -484,101 +639,47 @@ def append_rows(
         if not counts:
             if batch_id is None:
                 return m
-            m2 = {
-                **m,
-                "snapshot_id": m["snapshot_id"] + 1,
-                "parent_id": m["snapshot_id"],
-                "metrics": {**m["metrics"], "last_append_batch_id": batch_id},
-            }
-            _commit_manifest(root, m2)
-            return m2
-        pre_files = {
-            ck: set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
+            return _commit(
+                root, m, "append", {},
+                lambda mm: {**mm, "last_append_batch_id": batch_id},
             )
-            for ck in counts
-        }
-        _write_cells_salted(tagged, counts, cap, data_dir, keys)
+        by_ck = {_part_key(p, keys): p for p in m["partitions"]}
+        changes, new_paths = _write_cells(
+            spark,
+            root,
+            keys,
+            counts,
+            lambda: _write_cells_salted(
+                tagged, counts, cap, os.path.join(root, "data"), keys
+            ),
+            extend={ck: by_ck[ck] for ck in counts if ck in by_ck},
+        )
     finally:
         tagged.unpersist()
-    by_ck = {_part_key(p, keys): p for p in m["partitions"]}
-    parts = [dict(p) for p in m["partitions"]]
-    appended_files: list[str] = []
-    # one BATCHED footer pass for the whole commit (fans out as a Spark
-    # job past the threshold) — per-cell serial driver reads would stall
-    # a wide append exactly the way _rows_per_file's docstring warns
-    new_files: dict[tuple, list[str]] = {}
-    backfill: dict[tuple, list[str]] = {}
-    for ck in counts:
-        pdir = _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1])
-        new_files[ck] = sorted(
-            set(glob.glob(os.path.join(pdir, "*.parquet"))) - pre_files[ck]
-        )
-        if ck in by_ck and by_ck[ck].get("file_rows") is None:
-            # opportunistic backfill for pre-r4 manifests, bounded by the
-            # files of the cells this batch touches
-            backfill[ck] = [os.path.join(root, f) for f in by_ck[ck]["files"]]
-    flat = [p for ck in counts for p in new_files[ck]] + [
-        p for fl in backfill.values() for p in fl
-    ]
-    it = iter(_rows_per_file(flat, spark))
-    frows_by = {ck: [next(it) for _ in new_files[ck]] for ck in counts}
-    bf_by = {ck: [next(it) for _ in fl] for ck, fl in backfill.items()}
-    for ck, n in counts.items():
-        files = new_files[ck]
-        rel = [os.path.relpath(p, root) for p in files]
-        frows = frows_by[ck]
-        appended_files.extend(os.path.join(root, f) for f in rel)
-        if ck in by_ck:
-            tgt = next(p for p in parts if _part_key(p, keys) == ck)
-            old_fr = tgt.get("file_rows")
-            if old_fr is None:
-                old_fr = bf_by[ck]
-            tgt["files"] = tgt["files"] + rel
-            tgt["file_rows"] = old_fr + frows
-            tgt["n_rows"] = tgt["n_rows"] + n
-        else:
-            parts.append(
-                {
-                    "cell": ck[-1],
-                    "values": dict(zip(keys, ck)),
-                    "n_rows": n,
-                    "files": rel,
-                    "file_rows": frows,
-                }
-            )
-    metrics2 = {
-        **m["metrics"],
-        "rows_written": m["metrics"]["rows_written"] + sum(counts.values()),
-        # a manual append (batch_id=None) must NOT reset the streaming
-        # replay watermark — clobbering it to null would let a crashed
-        # stream re-deliver its last batch past the exactly-once guard
-        "last_append_batch_id": batch_id if batch_id is not None else last,
-        "appended_batches": m["metrics"].get("appended_batches", 0) + 1,
-    }
-    # keep the kNN exactness bound current: max with the appended files'
-    # own offset (one column-pruned scan of JUST the new files)
-    if "max_anchor_offset_m" in m["metrics"] and appended_files:
-        from ..operators.knn import corpus_anchor_offset_m
-
-        metrics2["max_anchor_offset_m"] = max(
-            m["metrics"]["max_anchor_offset_m"],
-            corpus_anchor_offset_m(spark.read.parquet(*appended_files)),
-        )
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": metrics2,
-    }
-    _commit_manifest(root, m2)
-    return m2
+    bump = _offset_bump(spark, m, new_paths)
+    n_new = sum(counts.values())
+    return _commit(
+        root,
+        m,
+        "append",
+        changes,
+        lambda mm: bump(
+            {
+                **mm,
+                "rows_written": mm["rows_written"] + n_new,
+                # a manual append (batch_id=None) must NOT reset the
+                # streaming replay watermark — clobbering it to null would
+                # let a crashed stream re-deliver its last batch past the
+                # exactly-once guard
+                "last_append_batch_id": (
+                    batch_id
+                    if batch_id is not None
+                    else mm.get("last_append_batch_id")
+                ),
+                "appended_batches": mm.get("appended_batches", 0) + 1,
+            }
+        ),
+    )
 
 
 def _plan_schema(keys: list[str], extra: str = "") -> str:
@@ -653,9 +754,7 @@ def _routing_plan(
     from ..operators.partition import tag_cells
 
     keys = keys or []
-    cells_df = spark.createDataFrame(
-        [_part_key(p, keys) for p in m["partitions"]], _plan_schema(keys)
-    )
+    cells_df = _cells_df(spark, m["partitions"], keys)
     batch12 = df.select(
         *keys, F.substring("quadkey", 1, 12).alias("quadkey")
     ).distinct()
@@ -666,20 +765,42 @@ def _routing_plan(
     return cells_df, cells_df.unionByName(new_cells)
 
 
-def _read_partitions(
+def _scan(
     spark: SparkSession, root: str, m: dict, parts: list[dict]
 ) -> DataFrame:
-    """Scan of exactly the given manifest partitions' files (keyed tables
-    recover their key columns from the directory names; ``cell`` is NOT
-    exposed — re-derive with ``tag_cells`` where needed)."""
+    """Scan of exactly the given partitions' files of snapshot ``m``,
+    planned with that snapshot's schema (schema evolution: files written
+    before a column was added null-fill it; later columns don't leak in).
+    Keyed tables recover their key columns from the directory names via
+    ``basePath`` + an explicit string schema — inference would coerce
+    '0300' to the integer 300. ``cell`` is NOT exposed (re-derive with
+    ``tag_cells`` where needed). No partitions gives an empty DataFrame
+    that keeps the table's schema."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
     files = [os.path.join(root, f) for p in parts for f in p["files"]]
+    empty = not files
+    if empty:
+        files = [os.path.join(root, f) for p in m["partitions"] for f in p["files"]]
     keys = _manifest_keys(m)
-    if keys:
-        return _keyed_reader(spark, m, keys, root).parquet(*files).drop("cell")
     reader = spark.read
-    if m.get("schema"):
+    if keys:
+        if not m.get("schema"):
+            raise ValueError(
+                f"keyed table at {root} has no stored schema; rewrite it"
+            )
+        fields = [f for f in _schema_struct(m).fields if f.name not in keys] + [
+            StructField(k, StringType(), True) for k in [*keys, "cell"]
+        ]
+        reader = reader.schema(StructType(fields)).option(
+            "basePath", os.path.join(root, "data")
+        )
+    elif m.get("schema"):
         reader = reader.schema(_schema_struct(m))
-    return reader.parquet(*files)
+    out = reader.parquet(*files)
+    if keys:
+        out = out.drop("cell")
+    return out.limit(0) if empty else out
 
 
 def upsert_rows(
@@ -719,32 +840,11 @@ def upsert_rows(
     """
     from ..operators.partition import tag_cells
 
-    m = current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    m = _head(root)
     part_keys = _manifest_keys(m)
-    if m.get("schema"):
-        allowed = {f["name"] for f in m["schema"]} | set(part_keys)
-        extra = set(df.columns) - allowed
-        if extra:
-            raise ValueError(
-                f"upsert columns {sorted(extra)} not in table schema; "
-                f"add_column first"
-            )
-    missing = set(part_keys) - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"upsert batch missing partition key columns {sorted(missing)}"
-        )
-    if part_keys:
-        _check_key_types(df, part_keys)
-    cap = (
-        max_per_file
-        if max_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
+    _check_batch(m, df, part_keys, "upsert")
+    cap = _cap(m, max_per_file)
     spark = df.sparkSession
-    data_dir = os.path.join(root, "data")
 
     cells_df, plan = _routing_plan(spark, m, df, part_keys)
     tagged = tag_cells(df, plan, part_keys).persist()
@@ -758,12 +858,7 @@ def upsert_rows(
                 f"upsert batch contains duplicate {key} values; a MERGE "
                 "source must be key-unique"
             )
-        new_counts = {
-            tuple(r[k] for k in part_keys) + (r["cell"],): r["n"]
-            for r in tagged.groupBy(*part_keys, "cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+        new_counts = _cell_counts(tagged, part_keys)
         if sum(new_counts.values()) != n_batch:
             raise ValueError(
                 f"{n_batch - sum(new_counts.values())} upsert rows have a "
@@ -776,134 +871,65 @@ def upsert_rows(
         # partition key value — e.g. a doc moving country), so the rewrite
         # set comes from a full manifest-planned scan with a broadcast
         # semi-join on the merge key
-        old_all = tag_cells(read_table(spark, root), cells_df, part_keys)
-        rewrite = sorted(
-            tuple(r[k] for k in part_keys) + (r["cell"],)
+        old_all = tag_cells(_scan(spark, root, m, m["partitions"]), cells_df, part_keys)
+        rewrite = {
+            _row_key(r, part_keys)
             for r in old_all.join(F.broadcast(keys_df), key, "left_semi")
             .select(*part_keys, "cell")
             .distinct()
             .collect()
-        )
-        append_cells = sorted(set(new_counts) - set(rewrite))
-        affected = sorted(set(rewrite) | set(new_counts))
+        }
+        affected = sorted(rewrite | set(new_counts))
         if not affected:
             return m
         if rewrite:
-            rw_set = set(rewrite)
             rw_parts = [
-                p for p in m["partitions"] if _part_key(p, part_keys) in rw_set
+                p for p in m["partitions"] if _part_key(p, part_keys) in rewrite
             ]
             survivors = tag_cells(
-                _read_partitions(spark, root, m, rw_parts), cells_df, part_keys
+                _scan(spark, root, m, rw_parts), cells_df, part_keys
             ).join(F.broadcast(keys_df), key, "left_anti")
             merged = survivors.unionByName(tagged.select(*survivors.columns))
         else:
             merged = tagged
         merged = merged.persist()
-        counts = {
-            tuple(r[k] for k in part_keys) + (r["cell"],): r["n"]
-            for r in merged.groupBy(*part_keys, "cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        pre_files = {
-            ck: set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, part_keys, dict(zip(part_keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
+        try:
+            counts = _cell_counts(merged, part_keys)
+            by_ck = {_part_key(p, part_keys): p for p in m["partitions"]}
+            changes, new_paths = _write_cells(
+                spark,
+                root,
+                part_keys,
+                {ck: counts.get(ck, 0) for ck in affected},
+                lambda: _write_cells_salted(
+                    merged, counts, cap, os.path.join(root, "data"), part_keys
+                ),
+                extend={
+                    ck: by_ck[ck]
+                    for ck in new_counts
+                    if ck in by_ck and ck not in rewrite
+                },
             )
-            for ck in affected
-        }
-        _write_cells_salted(merged, counts, cap, data_dir, part_keys)
-        merged.unpersist()
+        finally:
+            merged.unpersist()
     finally:
         tagged.unpersist()
-    by_ck = {_part_key(p, part_keys): p for p in m["partitions"]}
-    aff_set = set(affected)
-    parts = [
-        dict(p) for p in m["partitions"] if _part_key(p, part_keys) not in aff_set
-    ]
-    new_file_paths: list[str] = []
-    # batched footer pass (see append_rows): never per-cell serial reads
-    post_by: dict[tuple, list[str]] = {}
-    backfill = {}
-    for ck in affected:
-        pdir = _part_dir(data_dir, part_keys, dict(zip(part_keys, ck)), ck[-1])
-        post_by[ck] = sorted(
-            set(glob.glob(os.path.join(pdir, "*.parquet"))) - pre_files[ck]
-        )
-        if (
-            ck in append_cells
-            and ck in by_ck
-            and by_ck[ck].get("file_rows") is None
-        ):
-            backfill[ck] = [os.path.join(root, f) for f in by_ck[ck]["files"]]
-    flat = [p for ck in affected for p in post_by[ck]] + [
-        p for fl in backfill.values() for p in fl
-    ]
-    it = iter(_rows_per_file(flat, spark))
-    frows_by = {ck: [next(it) for _ in post_by[ck]] for ck in affected}
-    bf_by = {ck: [next(it) for _ in fl] for ck, fl in backfill.items()}
-    for ck in affected:
-        vals = dict(zip(part_keys, ck))
-        post = post_by[ck]
-        rel = [os.path.relpath(f, root) for f in post]
-        frows = frows_by[ck]
-        new_file_paths.extend(post)
-        if ck in append_cells and ck in by_ck:
-            prior = by_ck[ck]
-            old_fr = prior.get("file_rows")
-            if old_fr is None:
-                old_fr = bf_by[ck]
-            parts.append(
-                {
-                    **dict(prior),
-                    "files": prior["files"] + rel,
-                    "file_rows": old_fr + frows,
-                    "n_rows": prior["n_rows"] + counts.get(ck, 0),
-                }
-            )
-        else:
-            n = counts.get(ck, 0)
-            if n == 0:
-                continue  # every row of this cell moved or was replaced away
-            parts.append(
-                {
-                    "cell": ck[-1],
-                    "values": vals,
-                    "n_rows": n,
-                    "files": rel,
-                    "file_rows": frows,
-                }
-            )
-    parts.sort(key=lambda p: _part_key(p, part_keys))
-    metrics2 = {
-        **m["metrics"],
-        "upserted_batches": m["metrics"].get("upserted_batches", 0) + 1,
-        "rows_upserted": m["metrics"].get("rows_upserted", 0)
-        + sum(new_counts.values()),
-    }
-    # keep the kNN exactness bound current, exactly as append_rows does:
     # replacement geometry can raise the corpus anchor offset
-    if "max_anchor_offset_m" in m["metrics"] and new_file_paths:
-        from ..operators.knn import corpus_anchor_offset_m
-
-        metrics2["max_anchor_offset_m"] = max(
-            m["metrics"]["max_anchor_offset_m"],
-            corpus_anchor_offset_m(spark.read.parquet(*new_file_paths)),
-        )
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": metrics2,
-    }
-    _commit_manifest(root, m2)
-    return m2
+    bump = _offset_bump(spark, m, new_paths)
+    n_new = sum(new_counts.values())
+    return _commit(
+        root,
+        m,
+        "upsert",
+        changes,
+        lambda mm: bump(
+            {
+                **mm,
+                "upserted_batches": mm.get("upserted_batches", 0) + 1,
+                "rows_upserted": mm.get("rows_upserted", 0) + n_new,
+            }
+        ),
+    )
 
 
 def update_rows(
@@ -927,9 +953,7 @@ def update_rows(
     None = all rows) selects the rows to update. The table needs a unique
     ``key`` column. Returns the new manifest (or the current one when
     nothing matches)."""
-    m = current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    m = _head(root)
     if key.lower() in {c.lower() for c in assignments}:
         # rewriting the merge key would make the MERGE see only the NEW
         # values: old rows never match, survive untouched, and the updated
@@ -975,113 +999,59 @@ def delete_rows(
     """
     from ..operators.partition import tag_cells
 
-    m = current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    m = _head(root)
     keys = _manifest_keys(m)
-    cap = (
-        max_per_file
-        if max_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
-    data_dir = os.path.join(root, "data")
+    cap = _cap(m, max_per_file)
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     hit = F.coalesce(pred, F.lit(False))
 
-    cells_df = spark.createDataFrame(
-        [_part_key(p, keys) for p in m["partitions"]], _plan_schema(keys)
-    )
-    full = tag_cells(read_table(spark, root), cells_df, keys)
-    affected = sorted(
-        tuple(r[k] for k in keys) + (r["cell"],)
+    cells_df = _cells_df(spark, m["partitions"], keys)
+    full = tag_cells(_scan(spark, root, m, m["partitions"]), cells_df, keys)
+    affected = {
+        _row_key(r, keys)
         for r in full.filter(hit).select(*keys, "cell").distinct().collect()
-    )
+    }
     if not affected:
         return m
-    aff_set = set(affected)
-    aff_parts = [p for p in m["partitions"] if _part_key(p, keys) in aff_set]
+    aff_parts = [p for p in m["partitions"] if _part_key(p, keys) in affected]
     survivors = tag_cells(
-        _read_partitions(spark, root, m, aff_parts), cells_df, keys
+        _scan(spark, root, m, aff_parts), cells_df, keys
     ).filter(~hit)
     survivors = survivors.persist()
     try:
-        counts = {
-            tuple(r[k] for k in keys) + (r["cell"],): r["n"]
-            for r in survivors.groupBy(*keys, "cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        pre_files = {
-            ck: set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
+        counts = _cell_counts(survivors, keys)
+        changes, _ = _write_cells(
+            spark,
+            root,
+            keys,
+            {ck: counts.get(ck, 0) for ck in sorted(affected)},
+            lambda: _write_cells_salted(
+                survivors, counts, cap, os.path.join(root, "data"), keys
             )
-            for ck in affected
-        }
-        if counts:
-            _write_cells_salted(survivors, counts, cap, data_dir, keys)
+            if counts
+            else None,
+        )
     finally:
         survivors.unpersist()
-    parts = [
-        dict(p) for p in m["partitions"] if _part_key(p, keys) not in aff_set
-    ]
-    # batched footer pass (see append_rows): never per-cell serial reads
-    survivors_cks = [ck for ck in affected if counts.get(ck, 0) > 0]
-    post_by = {
-        ck: sorted(
-            set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
-            )
-            - pre_files[ck]
-        )
-        for ck in survivors_cks
-    }
-    it = iter(
-        _rows_per_file([p for ck in survivors_cks for p in post_by[ck]], spark)
-    )
-    for ck in survivors_cks:
-        post = post_by[ck]
-        parts.append(
-            {
-                "cell": ck[-1],
-                "values": dict(zip(keys, ck)),
-                "n_rows": counts[ck],
-                "files": [os.path.relpath(f, root) for f in post],
-                "file_rows": [next(it) for _ in post],
-            }
-        )
-    parts.sort(key=lambda p: _part_key(p, keys))
     n_deleted = sum(p["n_rows"] for p in aff_parts) - sum(counts.values())
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": {
-            **m["metrics"],
-            # the stored kNN bound (max_anchor_offset_m) stays: deletion
-            # can only shrink the true offset, so it remains a valid upper
-            # bound for exactness
-            "rows_deleted": m["metrics"].get("rows_deleted", 0) + n_deleted,
-            "deleted_batches": m["metrics"].get("deleted_batches", 0) + 1,
+    # the stored kNN bound (max_anchor_offset_m) stays: deletion can only
+    # shrink the true offset, so it remains a valid upper bound
+    return _commit(
+        root,
+        m,
+        "delete",
+        changes,
+        lambda mm: {
+            **mm,
+            "rows_deleted": mm.get("rows_deleted", 0) + n_deleted,
+            "deleted_batches": mm.get("deleted_batches", 0) + 1,
         },
-    }
-    _commit_manifest(root, m2)
-    return m2
+    )
 
 
 def manifest_at(root: str, snapshot_id: int) -> dict | None:
     """Load a specific snapshot's manifest (time travel)."""
-    path = os.path.join(_meta_dir(root), f"v{snapshot_id}.json")
+    path = _manifest_path(root, snapshot_id)
     if not os.path.exists(path):
         return None
     with open(path) as f:
@@ -1116,47 +1086,22 @@ def read_table(
     written before a column was added are null-filled for it by the
     parquet reader, and columns added after the snapshot don't leak in.
     """
-    m = manifest_at(root, snapshot_id) if snapshot_id is not None else current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(
-            f"no committed snapshot at {root}"
-            + (f" (snapshot {snapshot_id})" if snapshot_id is not None else "")
-        )
+    m = _head(root, snapshot_id)
     prefixes = (
         [quadkey_prefix]
         if isinstance(quadkey_prefix, str)
         else list(quadkey_prefix or [])
     )
-    files: list[str] = []
-    for part in m["partitions"]:
-        if prefixes:
-            cell = part["cell"]
-            if not any(
-                cell.startswith(p) or p.startswith(cell) for p in prefixes
-            ):
-                continue
-        if any(part["values"].get(k) != v for k, v in key_filters.items()):
-            continue
-        files.extend(os.path.join(root, f) for f in part["files"])
-    keys = _manifest_keys(m)
-    if keys:
-        # keyed table: key values live in directory names, recovered via
-        # basePath + explicit string schema (never inference)
-        reader = _keyed_reader(spark, m, keys, root)
-        if not files:
-            allf = [
-                os.path.join(root, f) for p in m["partitions"] for f in p["files"]
-            ]
-            return reader.parquet(*allf).limit(0).drop("cell")
-        return reader.parquet(*files).drop("cell")
-    reader = spark.read
-    if m.get("schema"):
-        reader = reader.schema(_schema_struct(m))
-    if not files:
-        # preserve schema by reading zero rows from the full table
-        allf = [os.path.join(root, f) for p in m["partitions"] for f in p["files"]]
-        return reader.parquet(*allf).limit(0)
-    return reader.parquet(*files)
+    parts = [
+        p
+        for p in m["partitions"]
+        if (
+            not prefixes
+            or any(p["cell"].startswith(q) or q.startswith(p["cell"]) for q in prefixes)
+        )
+        and all(p["values"].get(k) == v for k, v in key_filters.items())
+    ]
+    return _scan(spark, root, m, parts)
 
 
 def _schema_struct(manifest: dict):
@@ -1172,27 +1117,23 @@ def add_column(root: str, name: str, dtype: str) -> dict:
     same file list; readers null-fill the column for pre-existing files.
     Older snapshots keep their own schema (time travel shows the table as
     it was). Backfill happens naturally as cells are rewritten (compaction)
-    or via a new table build; there is no in-place UPDATE by design."""
-    m = current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    or via a new table build; there is no in-place UPDATE by design.
+    Touches no cell, so it never conflicts with a concurrent data commit."""
+    m = _head(root)
     if "schema" not in m:
         raise ValueError(
             f"table at {root} predates schema tracking; rewrite it first"
         )
-    if any(f["name"] == name for f in m["schema"]):
-        raise ValueError(f"column {name!r} already exists")
     from pyspark.sql.types import StructField, _parse_datatype_string
 
-    field = StructField(name, _parse_datatype_string(dtype), True)
-    m2 = {
-        **m,
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "schema": m["schema"] + [field.jsonValue()],
-    }
-    _commit_manifest(root, m2)
-    return m2
+    field = StructField(name, _parse_datatype_string(dtype), True).jsonValue()
+
+    def widen(schema: list) -> list:
+        if any(f["name"] == name for f in schema):
+            raise ValueError(f"column {name!r} already exists")
+        return schema + [field]
+
+    return _commit(root, m, "add_column", {}, lambda mm: mm, schema=widen)
 
 
 def read_table_cells(
@@ -1203,35 +1144,19 @@ def read_table_cells(
     its leaf cell is a prefix of a requested cell or vice versa; matching is
     a set lookup over all prefixes of the requested cells, so planning is
     O(#cells x 12 + #partitions) — never a scan."""
-    m = current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    m = _head(root)
     want = {c[:k] for c in cells for k in range(1, len(c) + 1)}
     want.add("")
     cellset = set(cells)
-    files: list[str] = []
-    for part in m["partitions"]:
-        pc = part["cell"]
-        # leaf above or at a requested cell, or leaf below one (deeper leaf
-        # whose prefix is a requested cell)
-        if pc in want or any(pc[:k] in cellset for k in range(1, len(pc) + 1)):
-            files.extend(os.path.join(root, f) for f in part["files"])
-    keys = _manifest_keys(m)
-    if keys:
-        reader = _keyed_reader(spark, m, keys, root)
-        if not files:
-            allf = [
-                os.path.join(root, f) for p in m["partitions"] for f in p["files"]
-            ]
-            return reader.parquet(*allf).limit(0).drop("cell")
-        return reader.parquet(*files).drop("cell")
-    reader = spark.read
-    if m.get("schema"):
-        reader = reader.schema(_schema_struct(m))
-    if not files:
-        allf = [os.path.join(root, f) for p in m["partitions"] for f in p["files"]]
-        return reader.parquet(*allf).limit(0)
-    return reader.parquet(*files)
+    # leaf above or at a requested cell, or leaf below one (deeper leaf
+    # whose prefix is a requested cell)
+    parts = [
+        p
+        for p in m["partitions"]
+        if p["cell"] in want
+        or any(p["cell"][:k] in cellset for k in range(1, len(p["cell"]) + 1))
+    ]
+    return _scan(spark, root, m, parts)
 
 
 def metrics(root: str) -> dict:
@@ -1246,16 +1171,7 @@ def metrics(root: str) -> dict:
         "rows_written": m["metrics"]["rows_written"],
         "recomputed_cells": m["metrics"]["recomputed_cells"],
         "partitions": {
-            # keyed partitions address by their hive path (the bare cell
-            # string would collide across key values)
-            (
-                "/".join(
-                    [f"{k}={p['values'][k]}" for k in keys]
-                    + [f"cell={p['cell']}"]
-                )
-                if keys
-                else p["cell"]
-            ): p["n_rows"]
+            _cell_name(_part_key(p, keys), keys): p["n_rows"]
             for p in m["partitions"]
         },
     }
@@ -1286,7 +1202,9 @@ def compact_cells(
     ingests that append many micro-batch files per cell are the intended
     caller. Keyed tables compact the same way — key columns are recovered
     from the hive directory names and written back as directories, never
-    as data columns.
+    as data columns. A compaction racing an append to the same cell
+    commits only if it wins; otherwise it raises
+    :class:`CommitConflictError` and leaves the append's files in place.
 
     Selection is per FILE where the manifest records ``file_rows``: a cell
     whose file count looks right but holds one skewed over-cap file (e.g.
@@ -1295,15 +1213,9 @@ def compact_cells(
     import pyarrow as pa
     from pyspark import TaskContext
 
-    m = current_manifest(root)
-    if m is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    m = _head(root)
     keys = _manifest_keys(m)
-    cap = (
-        max_rows_per_file
-        if max_rows_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
+    cap = _cap(m, max_rows_per_file)
 
     def needed(p) -> int:
         return 1 if not cap else -(-p["n_rows"] // cap)
@@ -1326,17 +1238,15 @@ def compact_cells(
     ]
     if not todo:
         return m
-    snap = m["snapshot_id"] + 1
+    # job-unique output names: a concurrent compaction (any process) can
+    # never overwrite this one's files
+    token = uuid.uuid4().hex[:12]
     data_dir = os.path.join(root, "data")
-    src = _read_partitions(spark, root, m, todo)
 
     from ..operators.partition import tag_cells
 
-    plan_df = spark.createDataFrame(
-        [_part_key(p, keys) for p in todo], _plan_schema(keys)
-    )
     tagged = (
-        tag_cells(src, plan_df, keys)
+        tag_cells(_scan(spark, root, m, todo), _cells_df(spark, todo, keys), keys)
         .repartition(max(len(todo), 1), *keys, "cell")
         .sortWithinPartitions(*keys, "cell", "quadkey")
     )
@@ -1373,7 +1283,7 @@ def compact_cells(
             pdir = _part_dir(data_dir, keys, dict(zip(keys, cur)), cur[-1])
             os.makedirs(pdir, exist_ok=True)
             base = (
-                f"compact-{snap}-{cur[-1] or 'root'}-"
+                f"compact-{token}-{cur[-1] or 'root'}-"
                 f"{tc.partitionId()}-{tc.taskAttemptId()}-{seq}.parquet"
             )
             fname = os.path.relpath(os.path.join(pdir, base), data_dir)
@@ -1437,8 +1347,7 @@ def compact_cells(
     ).collect()
     new_files: dict[tuple, list] = {}
     for r in results:
-        ck = tuple(r[k] for k in keys) + (r["cell"],)
-        new_files.setdefault(ck, []).append(
+        new_files.setdefault(_row_key(r, keys), []).append(
             (os.path.join("data", r["file"]), r["n_rows"])
         )
     # sanity: compaction must preserve row counts per partition
@@ -1446,37 +1355,31 @@ def compact_cells(
         ck = _part_key(p, keys)
         got = sum(n for _, n in new_files.get(ck, []))
         assert got == p["n_rows"], (ck, got, p["n_rows"])
-    parts = []
-    for p in m["partitions"]:
-        ck = _part_key(p, keys)
-        if ck in new_files:
-            pairs = sorted(new_files[ck])
-            parts.append(
-                {
-                    **p,
-                    "files": [f for f, _ in pairs],
-                    "file_rows": [n for _, n in pairs],
-                }
-            )
-        else:
-            parts.append(p)
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": snap,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": {**m["metrics"], "compacted_cells": len(todo)},
+    by_ck = {_part_key(p, keys): p for p in todo}
+    changes = {
+        ck: {
+            **by_ck[ck],
+            "files": [f for f, _ in sorted(pairs)],
+            "file_rows": [n for _, n in sorted(pairs)],
+        }
+        for ck, pairs in new_files.items()
     }
-    _commit_manifest(root, m2)
-    return m2
+    return _commit(
+        root, m, "compact", changes, lambda mm: {**mm, "compacted_cells": len(todo)}
+    )
 
 
 def expire_snapshots(root: str, keep_last: int = 1) -> int:
     """Delete manifests older than the newest ``keep_last`` snapshots and
-    any data file no kept snapshot references. Returns files deleted."""
+    any data file no kept snapshot references. Returns files deleted.
+    Never run this beside an in-flight writer: the files it is writing are
+    not referenced by any snapshot yet."""
     m = current_manifest(root)
     if m is None:
         return 0
+    # the VERSION hint may trail the head; never leave it naming a
+    # manifest this call deletes
+    _set_version(root, m["snapshot_id"])
     keep_ids = [m["snapshot_id"] - i for i in range(keep_last)]
     kept = [manifest_at(root, i) for i in keep_ids]
     live = {

@@ -218,8 +218,8 @@ AOI_COVER_TYPE = StructType(
 
 def rect_rings_mask(batch) -> np.ndarray:
     """(N,) bool: geometry i is EXACTLY an axis-aligned rectangle — one
-    closed 5-vertex shell, no holes, every vertex on a distinct bbox
-    corner, each traversal step changing exactly one coordinate, with
+    closed 5-vertex shell, no holes, its four vertices the four distinct
+    bbox corners, each traversal step changing exactly one coordinate, with
     positive width and height. For such a polygon ST_Within degenerates
     to bbox arithmetic (a convex boundary admits no proper edge
     crossing once every vertex is inside), which the spatial joins
@@ -259,10 +259,14 @@ def rect_rings_mask(batch) -> np.ndarray:
         ((x[:, :4] == w[:, None]) | (x[:, :4] == e[:, None]))
         & ((y[:, :4] == s[:, None]) | (y[:, :4] == n[:, None]))
     ).all(axis=1)
+    # four DISTINCT corners (bit per corner id): a zero-area back-and-forth
+    # ring like (0 0, 2 0, 2 1, 2 0, 0 0) is all-corner and one-move too
+    cid = (x[:, :4] == e[:, None]) + 2 * (y[:, :4] == n[:, None])
+    distinct = np.bitwise_or.reduce(1 << cid, axis=1) == 15
     onemove = (
         (x[:, 1:] != x[:, :4]) ^ (y[:, 1:] != y[:, :4])
     ).all(axis=1)
-    out[idx] = closed & corner & onemove & (w < e) & (s < n)
+    out[idx] = closed & corner & distinct & onemove & (w < e) & (s < n)
     return out
 
 

@@ -8,7 +8,7 @@ fuzz the geometry codecs far beyond the fixture corpus.
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from open_buildings_spark.geo.wkt import (
     GT_MULTIPOLYGON,
@@ -151,3 +151,40 @@ def test_point_roundtrip(x, y):
     np.testing.assert_array_equal(b1.coords, [[x, y]])
     b2 = parse_wkb_batch(pd.Series([bytes(wkb_from_batch(b1)[0])]))
     _assert_batches_equal(b1, b2)
+
+
+# --- rectangle fast path vs exact kernels --------------------------------
+# Five-vertex closed rings on a tiny grid: real rectangles (any start
+# corner, either orientation) mixed with zero-area back-and-forth rings,
+# repeated vertices and diagonal steps — every shape the corner/one-move
+# tests could mistake for a rectangle.
+_grid_ring = st.lists(
+    st.tuples(st.sampled_from([0.0, 1.0, 2.0]), st.sampled_from([0.0, 1.0])),
+    min_size=4, max_size=4,
+).map(lambda v: v + [v[0]])
+
+# points on, inside and outside every candidate edge
+_probe_wkt = pd.Series(
+    [point_wkt(x, y) for x in np.arange(-0.5, 2.75, 0.25) for y in np.arange(-0.5, 1.75, 0.25)]
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(_grid_ring)
+@example([(0.0, 0.0), (2.0, 0.0), (2.0, 1.0), (2.0, 0.0), (0.0, 0.0)])
+def test_rect_fast_paths_match_exact_kernels(pts):
+    from open_buildings_spark.geo import kernels
+    from open_buildings_spark.udfs import rect_rings_mask
+
+    rings = [(np.asarray(pts, dtype=np.float64), False)]
+    probes = parse_wkt_batch(_probe_wkt)
+    np.testing.assert_array_equal(
+        kernels.intersects_mask(probes, rings),
+        kernels._intersects_exact(probes, rings),
+    )
+    rect = kernels.rings_rect(rings)
+    if rect is not None:
+        w, s, e, n = rect
+        assert {tuple(p) for p in pts} == {(w, s), (w, n), (e, s), (e, n)}
+    # the vectorized twin (spatial-join witness) classifies it the same way
+    assert bool(rect_rings_mask(_batch_of(polygon_wkt([pts])))[0]) == (rect is not None)

@@ -252,3 +252,26 @@ def test_gp_headers_np_byte_identical():
     h = gp_headers_np(4326, bb)
     for i in range(len(bb)):
         assert h[i].tobytes() == gp_header(4326, tuple(bb[i]))
+
+
+def test_insert_error_stops_prefetch_thread(spark, small_geo, tmp_path, monkeypatch):
+    """An insert failure in the single-writer loop must not strand the
+    prefetch reader blocked on its full queue, nor leave scratch files."""
+    import os
+    import threading
+
+    def boom(*a, **k):
+        raise sqlite3.OperationalError("injected insert failure")
+
+    monkeypatch.setattr(gpkg, "_bulk_insert", boom)
+    path = str(tmp_path / "x.gpkg")
+    # many scratch parts -> many batches: the reader outruns the queue
+    with pytest.raises(sqlite3.OperationalError, match="injected"):
+        gpkg.write_gpkg(small_geo.repartition(8), path)
+
+    def prefetch_of_write_gpkg(t):
+        target = getattr(t, "_target", None)
+        return "write_gpkg" in getattr(target, "__qualname__", "")
+
+    assert not [t for t in threading.enumerate() if prefetch_of_write_gpkg(t)]
+    assert sorted(os.listdir(tmp_path)) == []

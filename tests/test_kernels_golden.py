@@ -252,21 +252,12 @@ def test_haversine_known():
     assert d == pytest.approx(111195, rel=1e-3)
 
 
-def test_cell_index_provider_abstraction():
-    from open_buildings_spark.geo.cells import cell_index
-
-    qk = cell_index("quadkey")
-    c = qk.cell_of_scalar(55.4530911764705, -4.62311864604, 12)
-    assert c == SEYCHELLES_QUADKEY
-    assert qk.parent(c, 5) == c[:5]
-    nb = qk.neighbors(c, 1)
-    assert len(nb) == 9 and c in nb
-    cover = qk.cover_bbox(55.4528, -4.6235, 55.4534, -4.6227, 12)
-    assert c in cover
-    vec = qk.cell_of(np.array([55.4530911764705]), np.array([-4.62311864604]), 12)
-    assert vec[0] == c
-    with pytest.raises(ImportError):
-        cell_index("h3")  # not installed in this environment
+def test_seychelles_tile_neighbors_and_bbox_range():
+    x, y, z = mercator.tile_from_quadkey(SEYCHELLES_QUADKEY)
+    nb = mercator.tile_neighbors(x, y, z, 1)
+    assert len(nb) == 9 and (x, y) in nb
+    x0, y0, x1, y1 = mercator.bbox_tile_range(55.4528, -4.6235, 55.4534, -4.6227, 12)
+    assert x0 <= x <= x1 and y0 <= y <= y1
 
 
 def test_parse_mixed_batch_preserves_geom_order_invariant():

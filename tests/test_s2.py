@@ -254,23 +254,6 @@ def test_cover_bbox_is_tight_for_small_rects():
     assert 1 <= len(cover) <= 16
 
 
-def test_cell_index_s2_provider():
-    from open_buildings_spark.geo.cells import cell_index
-
-    idx = cell_index("s2")
-    assert idx.name == "s2" and not idx.hierarchical_prefix
-    c = idx.cell_of_scalar(12.5, 41.9, 10)
-    assert c == int(s2.cells_from_lonlat(np.array([12.5]), np.array([41.9]), 10)[0])
-    np.testing.assert_array_equal(
-        idx.cell_of(np.array([12.5]), np.array([41.9]), 10), np.array([c])
-    )
-    p = idx.parent(c, 6)
-    lo, hi = s2.cell_range(np.array([p]))
-    assert lo[0] <= c <= hi[0]
-    assert c in idx.neighbors(c, 1)
-    assert any(lo[0] <= x <= hi[0] for x in idx.cover_bbox(12.4, 41.8, 12.6, 42.0, 6))
-
-
 def test_add_s2_cell_matches_numpy(spark):
     """Operator output == direct numpy kernel on the same lon/lat, nulls
     stay null, and the rollup plan keeps exactly TWO ArrowEvalPython nodes

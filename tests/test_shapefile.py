@@ -128,3 +128,20 @@ def test_dbf_bigint_width_and_overflow(spark, tmp_path):
     # a value wider than its declared field raises instead of truncating
     with pytest.raises(ValueError):
         shp._dbf_value(10**25, "N", 20, 0)
+
+
+def test_dbf_overflow_in_executor_raises_clean_error(spark, tmp_path):
+    """A numeric value too wide for its DBF field, found while encoding on
+    an executor, surfaces as a ValueError naming the column and leaves no
+    scratch directory or partial triple behind."""
+    import os
+
+    from open_buildings_spark.operators import shapefile as shp
+
+    df = spark.createDataFrame(
+        [("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", 1.0e20)],
+        "wkt string, too_wide double",
+    )
+    with pytest.raises(ValueError, match="too_wide.*does not fit"):
+        shp.write_shp(df, str(tmp_path / "wide.shp"))
+    assert os.listdir(tmp_path) == []

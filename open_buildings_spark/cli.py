@@ -470,23 +470,26 @@ def cmd_mixture(args) -> None:
     df = spark.read.parquet(args.src)
     # a weighted source with no rows binds the whole mix to zero — a typo
     # in --weights must fail loudly, not ship an empty training mix
-    # compare as strings: CLI weight keys are always strings, so a
-    # non-string strata column must be normalized or every weight looks
-    # missing and valid invocations die with a misleading error
-    present = {
-        r["_s"]
-        for r in df.select(
-            F.col(args.strata_col).cast("string").alias("_s")
+    # CLI weight keys are strings: match them against the strata values
+    # cast to string, then hand mixture_sample the column's own values
+    # (an int strata column never equals a string key)
+    by_str = {
+        r["_s"]: r["_v"]
+        for r in df.where(F.col(args.strata_col).isNotNull())
+        .select(
+            F.col(args.strata_col).alias("_v"),
+            F.col(args.strata_col).cast("string").alias("_s"),
         )
         .distinct()
         .collect()
     }
-    missing = sorted(set(weights) - present)
+    missing = sorted(set(weights) - set(by_str))
     if missing:
         raise SystemExit(
             f"--weights names source(s) with no rows: {missing}; "
-            f"available: {sorted(present)[:20]}"
+            f"available: {sorted(by_str)[:20]}"
         )
+    weights = {by_str[k]: w for k, w in weights.items()}
     out = mixture_sample(df, weights, strata_col=args.strata_col, id_col=args.id_col)
     out.write.mode("overwrite").parquet(args.dst)
     n = spark.read.parquet(args.dst).count()

@@ -559,12 +559,19 @@ def countries_df(spark: SparkSession) -> DataFrame:
     """Small-side countries table mirroring the reference's schema
     (isocountrycodealpha2 + WKB geometry; open_buildings/overture/
     add_columns.py:52,58-63)."""
-    from .geo.wkt import polygon_wkb
+    import pandas as pd
 
-    rows = []
-    for iso, (w, s, e, n) in countries():
-        wkb = polygon_wkb([[[w, s], [e, s], [e, n], [w, n], [w, s]]])
-        rows.append((iso, bytearray(wkb), w, s, e, n))
+    from .geo.wkt import parse_wkt_batch, polygon_wkt, wkb_from_batch
+
+    rects = countries()
+    wkb = wkb_from_batch(
+        parse_wkt_batch(
+            pd.Series(
+                [polygon_wkt([[[w, s], [e, s], [e, n], [w, n], [w, s]]]) for _, (w, s, e, n) in rects]
+            )
+        )
+    ).to_pylist()
+    rows = [(iso, bytearray(g), *box) for (iso, box), g in zip(rects, wkb)]
     return spark.createDataFrame(
         rows, "isocountrycodealpha2 string, geometry binary, w double, s double, e double, n double"
     )

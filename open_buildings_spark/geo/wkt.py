@@ -13,9 +13,15 @@ Batch layout (ragged arrays, one struct for N geometries):
   ring_is_hole : (R,) bool, True for interior rings
   gtype        : (N,) int8, 1=Point 3=Polygon 6=MultiPolygon, -1=missing/invalid
 
-Parsing has a fully vectorized fast path for single-ring ``POLYGON ((...))``
-rows (the overwhelmingly common shape in building footprints) and a general
-recursive-descent fallback for multipolygons / holes.
+A missing geometry has no rings and a point is one ring of one vertex
+(both parsers guarantee this).
+
+Parsing has a fully vectorized fast path for canonical polygon,
+multipolygon and point rows and a general recursive-descent fallback.
+Encoding has no per-row path: the byte-layout helpers below
+(:func:`ring_parts`, :func:`scatter`, :func:`binary_array`) place every
+row's bytes by offset arithmetic, for WKB here and for the FlatGeobuf,
+Shapefile and GeoPackage encoders.
 """
 
 from __future__ import annotations
@@ -518,31 +524,145 @@ def geojson_geometry_to_wkt(geometry: dict) -> str:
 
 
 # ---------------------------------------------------------------------------
-# WKB (little-endian, 2D) — used for the countries table / GeoParquet parity.
+# Batch byte layout shared by the WKB, FlatGeobuf, Shapefile and GeoPackage
+# encoders: each row's bytes land at offsets computed from ring counts and
+# sizes, and the coordinates move in one scatter of the whole coords array.
 # ---------------------------------------------------------------------------
 
 
-def _wkb_ring(coords) -> bytes:
-    arr = np.asarray(coords, dtype="<f8")
-    return struct.pack("<I", len(arr)) + arr.tobytes()
+def scatter(buf: np.ndarray, pos, vals, dtype) -> None:
+    """Write ``vals`` as ``dtype`` items at byte positions ``pos`` of the
+    uint8 array ``buf``. Positions are unaligned in general, so they are
+    grouped by alignment residue (one radix sort) and each group is
+    written through one shifted typed view of ``buf``."""
+    dt = np.dtype(dtype)
+    pos = np.asarray(pos, dtype=np.int64)
+    vals = np.broadcast_to(np.asarray(vals).astype(dt, copy=False), pos.shape)
+    w = dt.itemsize
+    res = (pos % w).astype(np.uint8)
+    order = np.argsort(res, kind="stable")
+    cut = np.searchsorted(res[order], np.arange(w + 1))
+    pos, vals = pos[order], vals[order]
+    for k in range(w):
+        a, b = cut[k], cut[k + 1]
+        if a < b:
+            view = buf[k : k + (len(buf) - k) // w * w].view(dt)
+            view[(pos[a:b] - k) // w] = vals[a:b]
 
 
-def polygon_wkb(rings: list) -> bytes:
-    return (
-        b"\x01" + struct.pack("<I", GT_POLYGON) + struct.pack("<I", len(rings))
-        + b"".join(_wkb_ring(r) for r in rings)
+def put_xy(buf: np.ndarray, pos: np.ndarray, xy: np.ndarray) -> None:
+    """Scatter (K, 2) vertices to byte positions ``pos`` as x, y doubles."""
+    scatter(buf, pos, np.ascontiguousarray(xy, dtype="<f8").view("V16").ravel(), "V16")
+
+
+def copy_ragged(buf, dst, src_buf, src, lens) -> None:
+    """``buf[dst[i]:dst[i] + lens[i]] = src_buf[src[i]:src[i] + lens[i]]``
+    for every i, as one gather/scatter."""
+    total = int(lens.sum())
+    if total:
+        at = np.arange(total) - np.repeat(np.cumsum(lens) - lens, lens)
+        buf[np.repeat(dst, lens) + at] = src_buf[np.repeat(src, lens) + at]
+
+
+def binary_array(buf: np.ndarray, offsets: np.ndarray, valid: np.ndarray):
+    """Arrow ``binary`` array over one encoder buffer: row i is
+    ``buf[offsets[i]:offsets[i + 1]]``, null where ``valid`` is False."""
+    import pyarrow as pa
+
+    nulls = int((~valid).sum())
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(valid),
+        [bitmap, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(buf)],
+        null_count=nulls,
     )
 
 
-def multipolygon_wkb(polys: list) -> bytes:
-    return (
-        b"\x01" + struct.pack("<I", GT_MULTIPOLYGON) + struct.pack("<I", len(polys))
-        + b"".join(polygon_wkb(rings) for rings in polys)
+def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 row offsets, uint8 data) of an Arrow binary or string array."""
+    import pyarrow as pa
+
+    if len(arr) == 0:
+        return np.zeros(1, dtype=np.int64), np.zeros(0, dtype=np.uint8)
+    wide = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type)
+    _, offs, data = arr.buffers()[:3]
+    offs = np.frombuffer(offs, dtype=np.int64 if wide else np.int32)
+    data = np.frombuffer(data, dtype=np.uint8) if data is not None else np.zeros(0, np.uint8)
+    return offs[arr.offset : arr.offset + len(arr) + 1].astype(np.int64), data
+
+
+def ring_parts(batch: GeomBatch) -> tuple[np.ndarray, np.ndarray]:
+    """(bounds, part_start): the rings of geometry g are
+    ``bounds[g]:bounds[g + 1]``; ``part_start`` marks each geometry's
+    first ring and, in a multipolygon, every shell ring (holes follow
+    their shell)."""
+    bounds = np.searchsorted(batch.ring_geom, np.arange(batch.n_geoms + 1))
+    start = np.zeros(batch.n_rings, dtype=bool)
+    start[bounds[:-1][bounds[:-1] < batch.n_rings]] = True
+    start |= (batch.gtype[batch.ring_geom] == GT_MULTIPOLYGON) & ~batch.ring_is_hole
+    return bounds, start
+
+
+def vertex_rings(batch: GeomBatch) -> tuple[np.ndarray, np.ndarray]:
+    """(ring of each vertex, the vertex's index within its ring)."""
+    sizes = np.diff(batch.ring_offsets)
+    ring = np.repeat(np.arange(len(sizes)), sizes)
+    return ring, np.arange(len(ring)) - batch.ring_offsets[:-1][ring]
+
+
+def wkb_layout(batch: GeomBatch, lead: int = 0):
+    """(uint8 buffer, int64 row offsets, valid mask): each present row is
+    ``lead`` zero bytes (a caller's header slot) followed by its
+    little-endian 2D WKB. Point: byte order + type + x, y. Polygon: byte
+    order + type + ring count, then per ring a vertex count and the
+    vertices. MultiPolygon: byte order + type + part count, then per part
+    a Polygon header and its rings."""
+    gt = batch.gtype.astype(np.int64)
+    bounds, start = ring_parts(batch)
+    sizes = np.diff(batch.ring_offsets)
+    rg = batch.ring_geom
+    point = gt[rg] == GT_POINT
+    part_head = start & (gt[rg] == GT_MULTIPOLYGON)
+    ring_len = 9 * part_head + 4 * ~point + 16 * np.where(point, start, sizes)
+    cum = np.concatenate([[0], np.cumsum(ring_len)])
+    valid = gt != GT_MISSING
+    head = np.where(gt == GT_POINT, 5, 9)
+    row_len = np.where(valid, lead + head + cum[bounds[1:]] - cum[bounds[:-1]], 0)
+    offsets = np.concatenate([[0], np.cumsum(row_len)])
+    buf = np.zeros(int(offsets[-1]), dtype=np.uint8)
+    at = offsets[:-1] + lead
+    v = np.nonzero(valid)[0]
+    buf[at[v]] = 1
+    scatter(buf, at[v] + 1, gt[v], "<u4")
+    count = np.where(
+        gt == GT_MULTIPOLYGON, np.bincount(rg[start], minlength=len(gt)), np.diff(bounds)
     )
+    poly = v[gt[v] != GT_POINT]
+    scatter(buf, at[poly] + 5, count[poly], "<u4")
+    ring_at = (at + head - cum[bounds[:-1]])[rg] + cum[:-1]
+    ph = np.nonzero(part_head)[0]
+    buf[ring_at[ph]] = 1
+    scatter(buf, ring_at[ph] + 1, GT_POLYGON, "<u4")
+    part = np.cumsum(start) - 1
+    scatter(buf, ring_at[ph] + 5, np.bincount(part)[part[ph]], "<u4")
+    ring_at += 9 * part_head
+    scatter(buf, ring_at[~point], sizes[~point], "<u4")
+    ring_at += 4 * ~point
+    ring, local = vertex_rings(batch)
+    dst, xy = ring_at[ring] + 16 * local, batch.coords
+    if point.any():
+        keep = ~point[ring] | ((local == 0) & start[ring])
+        dst, xy = dst[keep], xy[keep]
+    put_xy(buf, dst, xy)
+    return buf, offsets, valid
 
 
-def point_wkb(x: float, y: float) -> bytes:
-    return b"\x01" + struct.pack("<I", GT_POINT) + struct.pack("<dd", x, y)
+def wkb_from_batch(batch: GeomBatch):
+    """Arrow ``binary`` array with each geometry's WKB (null for missing);
+    every geometry type comes from the one offset layout of
+    :func:`wkb_layout`."""
+    return binary_array(*wkb_layout(batch))
 
 
 def parse_wkb(buf: bytes):
@@ -599,68 +719,6 @@ def parse_wkb(buf: bytes):
                 rings.append((arr, i > 0))
         return GT_MULTIPOLYGON, rings
     raise ValueError(f"unsupported WKB geometry code {raw}")
-
-
-def wkb_from_batch(batch: GeomBatch) -> np.ndarray:
-    """Serialize each geometry of a batch to WKB bytes (None for missing).
-
-    Holes follow their shell; multipolygon parts are split on shell rings.
-    Single-ring polygons (the dominant footprint shape) serialize in bulk:
-    one structured-array fill per ring-size group replaces per-row
-    struct.pack chains, byte-identical to :func:`polygon_wkb`. Points,
-    multipolygons and holed polygons take the scalar path.
-    """
-    out = np.full(batch.n_geoms, None, dtype=object)
-    ng = batch.n_geoms
-    if ng == 0:
-        return out
-    bounds = np.searchsorted(batch.ring_geom, np.arange(ng + 1))
-    nrings = bounds[1:] - bounds[:-1]
-    first = np.minimum(bounds[:-1], max(batch.n_rings - 1, 0))
-    sizes = np.diff(batch.ring_offsets)
-    elig = (batch.gtype == GT_POLYGON) & (nrings == 1)
-    if batch.n_rings:
-        elig &= ~batch.ring_is_hole[first]
-    else:
-        elig[:] = False
-    for L in np.unique(sizes[first[elig]]) if elig.any() else []:
-        gsel = np.nonzero(elig & (sizes[first] == L))[0]
-        starts = batch.ring_offsets[first[gsel]]
-        block = batch.coords[starts[:, None] + np.arange(L)]
-        dt = np.dtype(
-            [("bo", "u1"), ("gt", "<u4"), ("nr", "<u4"), ("np", "<u4"),
-             ("pts", "<f8", (L, 2))]
-        )
-        arr = np.empty(len(gsel), dtype=dt)
-        arr["bo"] = 1
-        arr["gt"] = GT_POLYGON
-        arr["nr"] = 1
-        arr["np"] = L
-        arr["pts"] = block
-        buf = arr.tobytes()
-        sz = arr.itemsize
-        for j, g in enumerate(gsel):
-            out[g] = buf[j * sz : j * sz + sz]
-    rest = np.nonzero((batch.gtype != GT_MISSING) & ~elig)[0]
-    for g in rest:
-        rings = [
-            (batch.ring(r), bool(batch.ring_is_hole[r]))
-            for r in range(bounds[g], bounds[g + 1])
-        ]
-        gt = batch.gtype[g]
-        if gt == GT_POINT:
-            out[g] = point_wkb(rings[0][0][0, 0], rings[0][0][0, 1])
-        elif gt == GT_POLYGON:
-            out[g] = polygon_wkb([c for c, _ in rings])
-        else:  # multipolygon: new part at each shell
-            parts: list[list] = []
-            for coords, hole in rings:
-                if not hole or not parts:
-                    parts.append([coords])
-                else:
-                    parts[-1].append(coords)
-            out[g] = multipolygon_wkb(parts)
-    return out
 
 
 def parse_wkb_batch(series: pd.Series) -> GeomBatch:

@@ -16,6 +16,12 @@ File layout (spec v3):
   window-query structure QGIS/GDAL range reads rely on)
   size-prefixed FlatBuffer ``Feature`` tables, one per feature
 
+Encoding: one batch encoder, :func:`encode_features` over
+:func:`encode_props`, lays out the Feature flatbuffers of every geometry
+type (points, holed polygons, multipolygons) with ``_FBBuilder``'s exact
+offset arithmetic run on per-row numpy arrays; ``write_fgb`` and the
+sharded builder ``write_fgb_shard`` both call it.
+
 Scale shape: feature ENCODING is distributed (one mapInArrow pass; each
 task emits a blob of size-prefixed features to a scratch file and reports
 count/bbox/geometry-types), and only the final single-file assembly is a
@@ -37,13 +43,20 @@ import pandas as pd
 
 from ..geo.wkt import (
     GT_MISSING,
+    GT_MULTIPOLYGON,
     GT_POINT,
     GT_POLYGON,
-    GT_MULTIPOLYGON,
+    binary_array,
+    binary_buffers,
+    copy_ragged,
     multipolygon_wkt,
     parse_wkt_batch,
     point_wkt,
     polygon_wkt,
+    put_xy,
+    ring_parts,
+    scatter,
+    vertex_rings,
 )
 
 MAGIC = b"\x66\x67\x62\x03\x66\x67\x62\x01"  # 'fgb' 3 'fgb' 1
@@ -146,15 +159,6 @@ class _FBBuilder:
             self._place(struct.pack(f"<{len(elems)}{fmt}", *elems))
         return self._place(_U32.pack(len(elems)))
 
-    def f64_vector(self, arr: np.ndarray) -> int:
-        """Double vector straight from a numpy array (no per-element
-        boxing) — the geometry hot path."""
-        data = np.ascontiguousarray(arr, dtype="<f8").tobytes()
-        self._pad(4, extra=len(data))
-        self._pad(8, extra=len(data))
-        self._place(data)
-        return self._place(_U32.pack(len(data) // 8))
-
     def offset_vector(self, positions) -> int:
         positions = list(positions)
         self._pad(4, extra=4 * len(positions))
@@ -171,11 +175,6 @@ class _FBBuilder:
         "u64": ("Q", 8),
         "f64": ("d", 8),
     }
-
-    def byte_vector(self, data: bytes) -> int:
-        self._pad(4, extra=len(data))
-        self._place(data)
-        return self._place(_U32.pack(len(data)))
 
     def table(self, fields) -> int:
         """fields: iterable of (slot, kind, value); kind is 'offset' or a
@@ -215,276 +214,212 @@ class _FBBuilder:
 
 
 # --------------------------------------------------------------------------
-# FGB encoding
+# FGB encoding: one batch encoder for every geometry type. The Feature
+# flatbuffers are laid out with the exact offset arithmetic of _FBBuilder
+# (back-to-front placement, padding included), run on per-row numpy arrays;
+# multipolygon parts are laid out one part index at a time.
 # --------------------------------------------------------------------------
 
 
-def _polygon_geometry(b: _FBBuilder, rings: list[np.ndarray]) -> int:
-    xy = rings[0] if len(rings) == 1 else np.concatenate(rings, axis=0)
-    fields = [(1, "offset", b.f64_vector(xy)), (6, "u8", GT_POLYGON)]
-    if len(rings) > 1:
-        ends = np.cumsum([len(r) for r in rings])
-        fields.insert(0, (0, "offset", b.vector("I", ends.tolist(), 4)))
-    return b.table(fields)
-
-
-def _geometry_table(b: _FBBuilder, gtype: int, rings) -> int:
-    """rings: list of (coords(K,2), is_hole). MultiPolygon splits parts on
-    shell rings (holes follow their shell, as in wkt.wkb_from_batch)."""
-    if gtype == GT_POINT:
-        return b.table(
-            [(1, "offset", b.f64_vector(rings[0][0][0])), (6, "u8", GT_POINT)]
-        )
-    if gtype == GT_POLYGON:
-        return _polygon_geometry(b, [c for c, _ in rings])
-    parts: list[list[np.ndarray]] = []
-    for coords, hole in rings:
-        if not hole or not parts:
-            parts.append([coords])
-        else:
-            parts[-1].append(coords)
-    part_pos = [_polygon_geometry(b, p) for p in parts]
-    return b.table(
-        [(6, "u8", GT_MULTIPOLYGON), (7, "offset", b.offset_vector(part_pos))]
-    )
-
-
-def _encode_properties(columns, row) -> bytes:
-    """FGB properties blob: per non-null value, u16 column index + value
-    (strings length-prefixed with u32) — the spec's row encoding."""
-    out = bytearray()
-    for i, (_, ctype) in enumerate(columns):
-        v = row[i]
-        # None / float NaN / pandas NA (nullable Int64/boolean frames hand
-        # the builders pd.NA scalars) all encode as absent
-        if v is None or v is getattr(pd, "NA", None) or (
-            isinstance(v, float) and np.isnan(v)
-        ):
-            continue
-        out += struct.pack("<H", i)
-        if ctype == CT_STRING:
-            raw = str(v).encode("utf-8")
-            out += struct.pack("<I", len(raw)) + raw
-        elif ctype == CT_DOUBLE:
-            out += struct.pack("<d", float(v))
-        elif ctype == CT_FLOAT:
-            out += struct.pack("<f", float(v))
-        elif ctype == CT_LONG:
-            out += struct.pack("<q", int(v))
-        elif ctype == CT_INT:
-            out += struct.pack("<i", int(v))
-        elif ctype == CT_BOOL:
-            out += struct.pack("<B", 1 if v else 0)
-        else:  # pragma: no cover
-            raise ValueError(f"unsupported column type {ctype}")
-    return bytes(out)
-
-
-def _encode_feature_slow(gtype: int, rings, props: bytes) -> bytes:
-    b = _FBBuilder()
-    fields = [(0, "offset", _geometry_table(b, gtype, rings))]
-    if props:
-        fields.append((1, "offset", b.byte_vector(props)))
-    fb = b.finish(b.table(fields))
-    return _U32.pack(len(fb)) + fb
-
-
-# Template fast path: for a fixed (gtype, xy byte length, props byte
-# length) the feature flatbuffer is byte-identical except the xy doubles
-# and the props payload, so the structural bytes are built ONCE via the
-# generic builder (with sentinel payloads located by scan) and per-row
-# encoding is two bytearray splices. ~6x fewer Python ops on the sink's
-# hot loop; building footprints cluster on a handful of shape keys.
-_TPL_CACHE: dict = {}
-
-
-def _fast_feature(gtype: int, xy_bytes: bytes, props: bytes) -> bytes:
-    key = (gtype, len(xy_bytes), len(props))
-    tpl = _TPL_CACHE.get(key)
-    if tpl is None:
-        sent_xy = np.frombuffer(b"\xab" * len(xy_bytes), dtype="<f8").reshape(-1, 2)
-        sent_props = b"\xcd" * len(props)
-        ref = _encode_feature_slow(gtype, [(sent_xy, False)], sent_props)
-        xy_at = ref.find(b"\xab" * len(xy_bytes))
-        p_at = ref.find(sent_props) if props else -1
-        assert xy_at >= 0 and (not props or p_at >= 0)
-        tpl = (ref, xy_at, p_at)
-        _TPL_CACHE[key] = tpl
-    base, xy_at, p_at = tpl
-    out = bytearray(base)
-    out[xy_at : xy_at + len(xy_bytes)] = xy_bytes
-    if p_at >= 0:
-        out[p_at : p_at + len(props)] = props
-    return bytes(out)
-
-
-def encode_feature(gtype: int, rings, columns, prop_row) -> bytes:
-    """One size-prefixed Feature flatbuffer."""
-    props = _encode_properties(columns, prop_row)
-    if gtype in (GT_POINT, GT_POLYGON) and len(rings) == 1 and len(props) >= 8:
-        return _fast_feature(
-            gtype, np.ascontiguousarray(rings[0][0], dtype="<f8").tobytes(), props
-        )
-    return _encode_feature_slow(gtype, rings, props)
-
-
-_VEC_FIXED_CT = {
-    CT_DOUBLE: ("<f8", np.float64),
-    CT_FLOAT: ("<f4", np.float32),
-    CT_LONG: ("<i8", np.int64),
-    CT_INT: ("<i4", np.int32),
-    CT_BOOL: ("u1", np.uint8),
+_CT_DTYPE = {
+    CT_DOUBLE: "<f8",
+    CT_FLOAT: "<f4",
+    CT_LONG: "<i8",
+    CT_INT: "<i4",
+    CT_BOOL: "u1",
 }
 
 
-def _prop_is_null(v) -> bool:
-    return (
-        v is None
-        or v is getattr(pd, "NA", None)
-        or (isinstance(v, float) and np.isnan(v))
-    )
+def encode_props(columns, rb):
+    """FGB properties blob per row of the Arrow batch ``rb`` (its i-th
+    column holds ``columns[i]``'s values): per present value, the u16
+    column index + the value (strings u32 length-prefixed UTF-8) — the
+    spec's row encoding. A null (or NaN) drops its field. Returns an Arrow
+    ``binary`` array."""
+    from ..pdexact import present
 
-
-def encode_features_batch(batch, columns, prop_lists) -> np.ndarray:
-    """Per-geometry size-prefixed Feature flatbuffers for a whole parsed
-    batch (object array, None for GT_MISSING rows) — byte-identical to
-    calling :func:`encode_feature` per row.
-
-    Single-ring polygons/points with fully non-null properties encode in
-    BULK: rows group by (gtype, ring length, per-string-column byte
-    lengths); within a group every feature shares one template (the
-    :func:`_fast_feature` cache), so the whole group is one np.tile plus
-    two strided views (coordinates as ``<f8``, properties as one
-    structured-array block). Rows with nulls, holes, or multipolygon
-    geometry take the scalar path. ~6x fewer Python ops on the sink's
-    hot loop than the per-row encoder it replaces."""
-    ng = batch.n_geoms
-    out = np.full(ng, None, dtype=object)
-    if ng == 0:
-        return out
-    bounds = np.searchsorted(batch.ring_geom, np.arange(ng + 1))
-    nrings = bounds[1:] - bounds[:-1]
-    sizes = np.diff(batch.ring_offsets)
-    first = np.minimum(bounds[:-1], max(batch.n_rings - 1, 0))
-    elig = ((batch.gtype == GT_POLYGON) | (batch.gtype == GT_POINT)) & (
-        nrings == 1
-    )
-    if batch.n_rings:
-        elig &= ~batch.ring_is_hole[first]
-    else:
-        elig[:] = False
-
-    # property columns -> per-row encoded forms + null mask (null rows
-    # drop fields from the props layout, so they go scalar)
-    has_null = np.zeros(ng, dtype=bool)
-    col_data = []  # (ctype, bytes-list | numpy array)
-    str_lens = []  # per string column: int64 byte length per row
-    for (cname, ct), vals in zip(columns, prop_lists):
+    n = rb.num_rows
+    found = [present(rb.column(i)) for i in range(len(columns))]
+    sizes = []
+    for i, (_, ct) in enumerate(columns):
         if ct == CT_STRING:
-            bs: list = [None] * ng
-            ln = np.zeros(ng, dtype=np.int64)
-            for j, v in enumerate(vals):
-                if _prop_is_null(v):
-                    has_null[j] = True
-                else:
-                    b = (v if isinstance(v, str) else str(v)).encode("utf-8")
-                    bs[j] = b
-                    ln[j] = len(b)
-            col_data.append((ct, bs))
-            str_lens.append(ln)
-        elif ct in _VEC_FIXED_CT:
-            arr = np.zeros(ng, dtype=_VEC_FIXED_CT[ct][1])
-            for j, v in enumerate(vals):
-                if _prop_is_null(v):
-                    has_null[j] = True
-                elif ct == CT_BOOL:
-                    arr[j] = 1 if v else 0
-                elif ct in (CT_LONG, CT_INT):
-                    arr[j] = int(v)
-                else:
-                    arr[j] = float(v)
-            col_data.append((ct, arr))
+            offs, _ = binary_buffers(rb.column(i))
+            sizes.append(6 + np.diff(offs))
+        elif ct in _CT_DTYPE:
+            sizes.append(np.full(n, 2 + np.dtype(_CT_DTYPE[ct]).itemsize))
         else:  # pragma: no cover - fgb_columns only emits the six above
             raise ValueError(f"unsupported column type {ct}")
-    elig &= ~has_null
+    sizes = [np.where(f, s, 0) for f, s in zip(found, sizes)]
+    offsets = np.concatenate([[0], np.cumsum(sum(sizes, np.zeros(n, np.int64)))])
+    buf = np.zeros(int(offsets[-1]), dtype=np.uint8)
+    at = offsets[:-1].copy()
+    for i, (_, ct) in enumerate(columns):
+        arr, m = rb.column(i), found[i]
+        scatter(buf, at[m], i, "<u2")
+        if ct == CT_STRING:
+            offs, data = binary_buffers(arr)
+            lens = np.diff(offs)[m]
+            scatter(buf, at[m] + 2, lens, "<u4")
+            copy_ragged(buf, at[m] + 6, data, offs[:-1][m], lens)
+        else:
+            vals = arr.fill_null(False if ct == CT_BOOL else 0)
+            scatter(buf, at[m] + 2, vals.to_numpy(zero_copy_only=False)[m], _CT_DTYPE[ct])
+        at += sizes[i]
+    return binary_array(buf, offsets, np.ones(n, dtype=bool))
 
-    # group rows by (gtype, ring length, string-length signature)
-    if elig.any():
-        gidx = np.nonzero(elig)[0]
-        keyparts = [batch.gtype[gidx].astype(np.int64), sizes[first[gidx]]]
-        keyparts += [ln[gidx] for ln in str_lens]
-        key = np.stack(keyparts, axis=1)
-        uniq, inv = np.unique(key, axis=0, return_inverse=True)
-        fixed_len = sum(
-            2 + np.dtype(_VEC_FIXED_CT[ct][0]).itemsize
-            for ct, _ in col_data
-            if ct != CT_STRING
+
+def encode_features(batch, props):
+    """Size-prefixed Feature flatbuffers for a whole parsed batch, as an
+    Arrow ``binary`` array (null for missing geometry); ``props`` holds
+    each row's properties blob (:func:`encode_props`), empty for none.
+
+    Each builder step (pad, place, table) runs on a per-row ``off`` array
+    (bytes placed so far, measured from the buffer's end), so every row
+    gets the bytes ``_FBBuilder`` would build for it; writes are recorded
+    as (rows, end offset, value) and scattered once the row lengths are
+    known. Points and polygons are one Geometry table; a multipolygon
+    lays out its part tables (one per shell, holes following) in part
+    order, then its own table over the part offsets."""
+    gt = batch.gtype.astype(np.int64)
+    ng = batch.n_geoms
+    bounds, start = ring_parts(batch)
+    sizes = np.diff(batch.ring_offsets)
+    multi = gt == GT_MULTIPOLYGON
+    valid = (gt != GT_MISSING) & ((np.diff(bounds) > 0) | multi)
+    pr = np.nonzero(start)[0]  # first ring of each part
+    pg = batch.ring_geom[pr]
+    k = np.diff(np.append(pr, batch.n_rings))  # rings per part
+    nv = np.where(gt[pg] == GT_POINT, 1, np.add.reduceat(sizes, pr) if len(pr) else 0)
+    pj = np.arange(len(pr)) - np.searchsorted(pg, pg)  # part index in its geometry
+    nparts = np.bincount(pg, minlength=ng)
+
+    off = np.zeros(ng, dtype=np.int64)
+    writes = []  # (rows, end offset, byte delta, value, dtype)
+
+    def pad(g, align, extra=0):
+        off[g] += -(off[g] + extra) % align
+
+    def place(g, nbytes, value=None, dtype=None):
+        off[g] += nbytes
+        end = off[g]
+        if value is not None:
+            writes.append((g, end, 0, value, dtype))
+        return end
+
+    def table(g, fields, nslots):
+        obj = off[g]
+        slot_end = {}
+        for slot, kind, value in fields:  # descending slot order
+            if kind == "offset":
+                pad(g, 4)
+                end = place(g, 4)
+                writes.append((g, end, 0, end - value, "<u4"))
+            else:
+                pad(g, np.dtype(kind).itemsize)
+                end = place(g, np.dtype(kind).itemsize, value, kind)
+            slot_end[slot] = end
+        pad(g, 4)
+        tpos = place(g, 4)
+        pad(g, 2)
+        vt = place(g, 4 + 2 * nslots, 4 + 2 * nslots, "<u2")
+        writes.append((g, vt, 2, tpos - obj, "<u2"))
+        for slot, end in slot_end.items():
+            writes.append((g, vt, 4 + 2 * slot, tpos - end, "<u2"))
+        writes.append((g, tpos, 0, vt - tpos, "<i4"))
+        return tpos
+
+    xy_end = np.zeros(len(pr), dtype=np.int64)
+    ends_end = np.zeros(len(pr), dtype=np.int64)
+    part_pos = np.zeros(len(pr), dtype=np.int64)
+
+    def geometry(p, gtype):
+        g = pg[p]
+        data = 16 * nv[p]
+        pad(g, 4, data)
+        pad(g, 8, data)
+        xy_end[p] = place(g, data)
+        xy = place(g, 4, 2 * nv[p], "<u4")
+        many = k[p] > 1
+        q, gq = p[many], g[many]
+        pad(gq, 4, 4 * k[q])
+        ends_end[q] = place(gq, 4 * k[q])
+        ends = place(gq, 4, k[q], "<u4")
+        one = ~many
+        part_pos[p[one]] = table(
+            g[one], [(6, "u1", gtype[one]), (1, "offset", xy[one])], 7
         )
-        for u in range(len(uniq)):
-            rows = gidx[inv == u]
-            m = len(rows)
-            gt = int(uniq[u][0])
-            L = int(uniq[u][1])
-            slens = [int(v) for v in uniq[u][2:]]
-            plen = fixed_len + sum(6 + s for s in slens)
-            xylen = L * 16
-            if plen < 8 or any(s == 0 for s in slens):
-                # template splice needs a locatable props block, and a
-                # zero-size S0 field has no numpy representation
-                continue
-            # template via the shared cache (identical to _fast_feature)
-            tpl_probe = _fast_feature(gt, b"\xab" * xylen, b"\xcd" * plen)
-            base, xy_at, p_at = _TPL_CACHE[(gt, xylen, plen)]
-            big = np.tile(np.frombuffer(base, dtype=np.uint8), (m, 1))
-            starts = batch.ring_offsets[first[rows]]
-            block = batch.coords[starts[:, None] + np.arange(L)]
-            big[:, xy_at : xy_at + xylen] = (
-                np.ascontiguousarray(block, dtype="<f8")
-                .view(np.uint8)
-                .reshape(m, xylen)
-            )
-            fields = []
-            si = 0
-            for k, (ct, _) in enumerate(col_data):
-                fields.append((f"i{k}", "<u2"))
-                if ct == CT_STRING:
-                    fields.append((f"l{k}", "<u4"))
-                    fields.append((f"s{k}", f"S{slens[si]}"))
-                    si += 1
-                else:
-                    fields.append((f"v{k}", _VEC_FIXED_CT[ct][0]))
-            pdtype = np.dtype(fields)
-            assert pdtype.itemsize == plen
-            pblock = np.zeros(m, dtype=pdtype)
-            si = 0
-            for k, (ct, data) in enumerate(col_data):
-                pblock[f"i{k}"] = k
-                if ct == CT_STRING:
-                    pblock[f"l{k}"] = slens[si]
-                    pblock[f"s{k}"] = [data[r] for r in rows]
-                    si += 1
-                else:
-                    pblock[f"v{k}"] = data[rows]
-            big[:, p_at : p_at + plen] = (
-                pblock.view(np.uint8).reshape(m, plen)
-            )
-            buf = big.tobytes()
-            w = big.shape[1]
-            for j, g in enumerate(rows):
-                out[g] = buf[j * w : j * w + w]
+        part_pos[q] = table(
+            gq, [(6, "u1", gtype[many]), (1, "offset", xy[many]), (0, "offset", ends)], 7
+        )
 
-    rest = np.nonzero((batch.gtype != GT_MISSING) & (out == None))[0]  # noqa: E711
-    ro = batch.ring_offsets
-    holes = batch.ring_is_hole
-    coords = batch.coords
-    for g in rest:
-        rings = [
-            (coords[ro[r] : ro[r + 1]], bool(holes[r]))
-            for r in range(bounds[g], bounds[g + 1])
-        ]
-        row = [pl[g] for pl in prop_lists]
-        out[g] = encode_feature(int(batch.gtype[g]), rings, columns, row)
-    return out
+    single = np.nonzero(valid[pg] & ~multi[pg])[0]
+    geometry(single, gt[pg[single]])
+    geom_pos = np.zeros(ng, dtype=np.int64)
+    geom_pos[pg[single]] = part_pos[single]
+    mg = np.nonzero(valid & multi)[0]
+    first_part = np.searchsorted(pg, mg)
+    max_parts = int(nparts[mg].max()) if len(mg) else 0
+    for j in range(max_parts):
+        p = np.nonzero(multi[pg] & (pj == j))[0]
+        geometry(p, np.full(len(p), GT_POLYGON))
+    # the parts' offset vector, entries placed last part first
+    pad(mg, 4, 4 * nparts[mg])
+    vec = off[mg] + 4 * nparts[mg]
+    for j in range(max_parts):
+        sel = nparts[mg] > j
+        end = vec[sel] - 4 * j
+        writes.append((mg[sel], end, 0, end - part_pos[first_part[sel] + j], "<u4"))
+    off[mg] = vec
+    vec = place(mg, 4, nparts[mg], "<u4")
+    geom_pos[mg] = table(mg, [(7, "offset", vec), (6, "u1", GT_MULTIPOLYGON)], 8)
+
+    poffs, pdata = binary_buffers(props)
+    plen = np.diff(poffs)
+    gv = np.nonzero(valid)[0]
+    root = np.zeros(ng, dtype=np.int64)
+    props_end = np.zeros(ng, dtype=np.int64)
+    g = gv[plen[gv] > 0]
+    pad(g, 4, plen[g])
+    props_end[g] = place(g, plen[g])
+    vec = place(g, 4, plen[g], "<u4")
+    root[g] = table(g, [(1, "offset", vec), (0, "offset", geom_pos[g])], 2)
+    g = gv[plen[gv] == 0]
+    root[g] = table(g, [(0, "offset", geom_pos[g])], 1)
+    pad(gv, np.where(multi[gv] & (nparts[gv] == 0), 4, 8), 4)
+    end = place(gv, 4)
+    writes.append((gv, end, 0, end - root[gv], "<u4"))
+
+    size = np.where(valid, off, 0)
+    offsets = np.concatenate([[0], np.cumsum(np.where(valid, 4 + size, 0))])
+    buf = np.zeros(int(offsets[-1]), dtype=np.uint8)
+    base = offsets[:-1] + 4 + size  # row's end: positions are base - end
+    writes.append((gv, base[gv] - offsets[:-1][gv], 0, size[gv], "<u4"))
+    by_dtype: dict = {}
+    for g, end, delta, value, dtype in writes:
+        pos = base[g] - end + delta
+        by_dtype.setdefault(dtype, []).append((pos, np.broadcast_to(value, pos.shape)))
+    for dtype, items in by_dtype.items():  # one scatter per field width
+        scatter(buf, np.concatenate([p for p, _ in items]), np.concatenate([v for _, v in items]), dtype)
+    # vertices of each part's xy vector, ring ends of multi-ring parts,
+    # and the props payloads
+    live = valid[pg]
+    part_of = np.cumsum(start) - 1
+    rel = batch.ring_offsets[:-1] - batch.ring_offsets[pr][part_of]
+    ring, local = vertex_rings(batch)
+    keep = live[part_of][ring] & (rel[ring] + local < nv[part_of][ring])
+    xy_at = (base[pg] - xy_end)[part_of] + 16 * rel
+    put_xy(buf, xy_at[ring[keep]] + 16 * local[keep], batch.coords[keep])
+    r = np.nonzero(live[part_of] & (k[part_of] > 1))[0]
+    q = part_of[r]
+    scatter(
+        buf,
+        base[pg[q]] - ends_end[q] + 4 * (r - pr[q]),
+        rel[r] + sizes[r],
+        "<u4",
+    )
+    g = gv[plen[gv] > 0]
+    copy_ragged(buf, base[g] - props_end[g], pdata, poffs[:-1][g], plen[g])
+    return binary_array(buf, offsets, valid)
 
 
 def encode_header(
@@ -687,44 +622,55 @@ def fgb_columns(schema_fields, wkt_col: str) -> list[tuple[str, int]]:
     return columns
 
 
-def write_fgb_pandas(
-    pdf: pd.DataFrame,
+def _encode_batch(rb, columns, wkt_col: str):
+    """One Arrow batch -> (parsed geometry, Feature array with nulls for
+    rows without geometry, bboxes of the encoded rows, their types)."""
+    from ..geo import kernels
+
+    batch = parse_wkt_batch(rb.column(wkt_col).to_pandas())
+    feats = encode_features(batch, encode_props(columns, rb.select([c for c, _ in columns])))
+    keep = feats.is_valid().to_numpy(zero_copy_only=False)
+    return batch, feats, kernels.bboxes(batch)[keep], batch.gtype[keep]
+
+
+def write_fgb_shard(
+    batches,
     path: str,
     columns: list[tuple[str, int]],
     wkt_col: str = "wkt",
     name: str | None = None,
 ) -> tuple[int, list[float] | None]:
-    """One in-memory pandas frame -> one complete .fgb file (magic, header
-    with count/envelope, features). The executor-side builder behind
+    """One shard's Arrow batches -> one complete .fgb file (magic, header
+    with count/envelope, index, features). The executor-side builder behind
     :func:`sharded export <..sharded.sharded_export>` — a shard fits in a
     task, so count and envelope are known before the header is written
     without the driver funnel ``write_fgb`` needs for one global file.
-    ``columns`` must come from :func:`fgb_columns` on the SPARK schema
-    (pandas dtypes lose int-ness under nulls). Features are Hilbert-sorted
-    in memory and the packed R-tree index written (the shard IS in memory,
-    so the spec's preferred layout is free here). Atomic via .inprogress.
-    Returns (feature count, data envelope [minx,miny,maxx,maxy] or None) —
-    the envelope feeds the shard manifest so window reads prune on TRUE
-    data extents (a geometry can spill past its quadkey's tile bounds:
-    the quadkey anchors at the bbox midpoint)."""
-    from ..geo import kernels
+    ``columns`` must come from :func:`fgb_columns` on the Spark schema.
+    Features are Hilbert-sorted in memory and the packed R-tree index
+    written (the shard IS in memory, so the spec's preferred layout is
+    free here). Atomic via .inprogress. Returns (feature count, data
+    envelope [minx,miny,maxx,maxy] or None) — the envelope feeds the
+    shard manifest so window reads prune on TRUE data extents (a geometry
+    can spill past its quadkey's tile bounds: the quadkey anchors at the
+    bbox midpoint)."""
+    import pyarrow as pa
 
-    col_names = [c for c, _ in columns]
-    prop_lists = [pdf[c].tolist() for c in col_names]
-    batch = parse_wkt_batch(pdf[wkt_col])
-    all_feats = encode_features_batch(batch, columns, prop_lists)
-    keep = batch.gtype != GT_MISSING
-    feats = list(all_feats[keep])
-    gtypes = {int(t) for t in np.unique(batch.gtype[keep])} if keep.any() else set()
+    from ..pdexact import attempt_tmp
+
+    parts = [_encode_batch(rb, columns, wkt_col)[1:] for rb in batches]
+    feats = pa.concat_arrays(
+        [f.cast(pa.large_binary()).drop_null() for f, _, _ in parts]
+        or [pa.array([], pa.large_binary())]
+    )
+    bb = np.concatenate([b for _, b, _ in parts] or [np.zeros((0, 4))])
+    gtypes = {int(t) for _, _, g in parts for t in np.unique(g)}
     n = len(feats)
-    bb = kernels.bboxes(batch)[keep].reshape(n, 4)
     if n:
         order = np.argsort(
             hilbert_from_lonlat((bb[:, 0] + bb[:, 2]) / 2, (bb[:, 1] + bb[:, 3]) / 2),
             kind="stable",
         )
-        feats = [feats[i] for i in order]
-        bb = bb[order]
+        feats, bb = feats.take(pa.array(order)), bb[order]
     envelope = (
         [float(bb[:, 0].min()), float(bb[:, 1].min()),
          float(bb[:, 2].max()), float(bb[:, 3].max())]
@@ -740,17 +686,14 @@ def write_fgb_pandas(
         n,
         INDEX_NODE_SIZE if n else 0,
     )
-    from ..pdexact import attempt_tmp
-
+    offs, data = binary_buffers(feats)
     tmp = attempt_tmp(path)
     with open(tmp, "wb") as out:
         out.write(MAGIC)
         out.write(header)
         if n:
-            sizes = np.asarray([len(f) for f in feats], dtype=np.int64)
-            offsets = np.concatenate([[0], np.cumsum(sizes)[:-1]])
-            out.write(build_index(bb, offsets))
-        out.write(b"".join(feats))
+            out.write(build_index(bb, offs[:-1] - offs[0]))
+        out.write(data[offs[0] : offs[-1]])
     os.replace(tmp, path)
     return n, envelope
 
@@ -797,7 +740,6 @@ def write_fgb(
             "else >= 2)"
         )
     columns = fgb_columns(df.schema.fields, wkt_col)
-    col_names = [c for c, _ in columns]
 
     if hilbert_sort:
         from .aoi import first_vertex_xy
@@ -817,9 +759,6 @@ def write_fgb(
             .drop("__obs_hkey")
         )
 
-    widx = df.columns.index(wkt_col)
-    cidx = [df.columns.index(c) for c in col_names]
-
     out_dir = os.path.dirname(os.path.abspath(path)) or "."
     work = os.path.join(out_dir, f".{os.path.basename(path)}.parts")
     if os.path.exists(work):
@@ -827,8 +766,6 @@ def write_fgb(
     os.makedirs(work)
 
     def enc(batches):
-        from ..geo import kernels
-
         tc = TaskContext.get()
         fname = os.path.join(
             work, f"part-{tc.partitionId():05d}-{tc.taskAttemptId()}.bin"
@@ -839,22 +776,19 @@ def write_fgb(
         maxx = maxy = float("-inf")
         gtypes: set[int] = set()
         bbs: list[np.ndarray] = []
-        fsize: list[int] = []
+        fsize: list[np.ndarray] = []
         with open(tmp, "wb") as fh:
             for rb in batches:
-                prop_lists = [rb.column(i).to_pylist() for i in cidx]
-                batch = parse_wkt_batch(rb.column(widx).to_pandas())
-                feats = encode_features_batch(batch, columns, prop_lists)
-                keep = batch.gtype != GT_MISSING
-                kept = feats[keep]
-                if len(kept):
-                    fh.write(b"".join(kept))
-                    fsize.extend(len(f) for f in kept)
-                    n += len(kept)
-                    gtypes.update(int(t) for t in np.unique(batch.gtype[keep]))
+                batch, feats, bb, gt = _encode_batch(rb, columns, wkt_col)
+                offs, data = binary_buffers(feats)
+                fh.write(data[offs[0] : offs[-1]])
+                sizes = np.diff(offs)
+                fsize.append(sizes[sizes > 0])
+                n += len(gt)
+                gtypes.update(int(t) for t in np.unique(gt))
                 # per-feature leaf bboxes from the vectorized kernel (per-
                 # row numpy mins in the loop measured ~3x the whole encode)
-                bbs.append(kernels.bboxes(batch)[keep])
+                bbs.append(bb)
                 if batch.coords.size:
                     minx = min(minx, float(batch.coords[:, 0].min()))
                     maxx = max(maxx, float(batch.coords[:, 0].max()))
@@ -870,7 +804,7 @@ def write_fgb(
             bb = np.concatenate(bbs)
             leaf["minx"], leaf["miny"] = bb[:, 0], bb[:, 1]
             leaf["maxx"], leaf["maxy"] = bb[:, 2], bb[:, 3]
-            leaf["nbytes"] = np.asarray(fsize, dtype=np.int64)
+            leaf["nbytes"] = np.concatenate(fsize)
         with open(fname + ".stats", "wb") as sf:
             sf.write(leaf.tobytes())
         yield pa.record_batch(

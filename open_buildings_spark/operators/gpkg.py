@@ -45,26 +45,11 @@ _SQLITE_TYPES = {
 }
 
 
-def gp_header(srs_id: int, envelope: tuple[float, float, float, float]) -> bytes:
-    """GeoPackageBinary header: magic 'GP', version 0, flags = little-endian
-    + envelope indicator 1 ([minx,maxx,miny,maxy]), srs_id, envelope."""
-    flags = 0b00000011  # envelope type 1 (<<1) | little-endian (bit 0)
-    minx, miny, maxx, maxy = envelope
-    return (
-        b"GP"
-        + bytes([0, flags])
-        + struct.pack("<i", srs_id)
-        + struct.pack("<dddd", minx, maxx, miny, maxy)
-    )
-
-
 def gp_headers_np(srs_id: int, bb: np.ndarray) -> np.ndarray:
-    """Vectorized :func:`gp_header` over an (N, 4) [minx, miny, maxx, maxy]
-    array — one structured-array fill instead of N struct.pack calls (runs
-    in the EXECUTOR encode pass, so header bytes ship ready-made and the
-    single-writer driver loop only concatenates). Returns the structured
-    array; row i's header bytes are ``out[i].tobytes()`` (40 bytes,
-    byte-identical to :func:`gp_header`)."""
+    """GeoPackageBinary headers for an (N, 4) [minx, miny, maxx, maxy]
+    array, as one structured array of 40-byte rows: magic 'GP', version
+    0, flags = little-endian + envelope indicator 1, srs_id, and the
+    envelope in the spec's [minx, maxx, miny, maxy] order."""
     hdr_dt = np.dtype(
         [("magic", "S2"), ("ver", "u1"), ("flags", "u1"), ("srs", "<i4"),
          ("env", "<f8", 4)]
@@ -81,7 +66,21 @@ def gp_headers_np(srs_id: int, bb: np.ndarray) -> np.ndarray:
     return h
 
 
-_INSERT_CHUNK = 256  # rows per multi-row INSERT (param cap 32766 / ncols)
+def gpkg_blobs(batch, bb: np.ndarray):
+    """GeoPackageBinary blob per geometry of a parsed batch — the 40-byte
+    header (EPSG:4326, envelope from the (N, 4) ``bb``) followed by the
+    WKB — as an Arrow ``binary`` array, null for missing geometry. Shared
+    by the single-file and sharded writers."""
+    from ..geo.wkt import binary_array, wkb_layout
+
+    buf, offsets, valid = wkb_layout(batch, lead=40)
+    at = offsets[:-1][valid]
+    head = gp_headers_np(4326, bb[valid]).view(np.uint8).reshape(-1, 40)
+    buf[at[:, None] + np.arange(40)] = head
+    return binary_array(buf, offsets, valid)
+
+
+_INSERT_CHUNK = 256  # rows per multi-row INSERT
 
 
 def _bulk_insert(db: sqlite3.Connection, table_cols_sql: str, rows: list) -> None:
@@ -92,7 +91,9 @@ def _bulk_insert(db: sqlite3.Connection, table_cols_sql: str, rows: list) -> Non
     if not rows:
         return
     ncols = len(rows[0])
-    k = max(1, min(_INSERT_CHUNK, 32000 // ncols))
+    # the connection's own bound-parameter cap (999 on older SQLite builds)
+    cap = db.getlimit(sqlite3.SQLITE_LIMIT_VARIABLE_NUMBER)
+    k = max(1, min(_INSERT_CHUNK, cap // ncols))
     ph = "(" + ",".join(["?"] * ncols) + ")"
     stmt = f"INSERT {table_cols_sql} VALUES " + ",".join([ph] * k)
     i = 0
@@ -442,43 +443,61 @@ def gpkg_columns(schema_fields, wkt_col: str) -> list[tuple[str, str]]:
     return columns
 
 
-def write_gpkg_pandas(
-    pdf: pd.DataFrame,
-    path: str,
-    columns: list[tuple[str, str]],
-    wkt_col: str = "wkt",
-    layer: str | None = None,
-    last_change: str = "2023-05-30T00:00:00Z",
-    spatial_index: bool = True,
-) -> tuple[int, list[float] | None]:
-    """One in-memory pandas frame -> one complete .gpkg file (OGC
-    12-128r19 metadata tables + feature layer + R-tree spatial index
-    when SQLite's rtree module is available; ``spatial_index=False``
-    skips it — SQLite rtree inserts cost ~12 us/feature, and
-    ``gpkg_bbox_search`` still answers windows via its envelope-scan
-    fallback). The executor-side builder behind sharded export;
-    ``columns`` must come from :func:`gpkg_columns` on the SPARK schema
-    (pandas dtypes lose int-ness under nulls). Atomic via .inprogress.
-    Returns (feature count, data envelope [minx,miny,maxx,maxy] or None)
-    for the shard manifest."""
-    from ..geo import kernels
-    from ..geo.wkt import GT_MULTIPOLYGON, GT_POINT, GT_POLYGON, parse_wkt_batch, wkb_from_batch
+# internal scratch columns carry a reserved prefix so a user attribute
+# named 'geom'/'minx'/... cannot produce a duplicate-column scratch schema
+_SCRATCH = [
+    "__obs_geom", "__obs_gtype", "__obs_minx", "__obs_miny",
+    "__obs_maxx", "__obs_maxy", "__obs_hkey",
+]
 
-    layer = layer or os.path.splitext(os.path.basename(path))[0]
-    col_names = [c for c, _ in columns]
-    batch = parse_wkt_batch(pdf[wkt_col])
-    wkb = wkb_from_batch(batch)
+
+def _encode_batch(rb, wkt_col: str, col_names: list[str]):
+    """One Arrow batch -> a record batch of its rows with geometry: the
+    complete GeoPackageBinary blob, geometry type, bbox, Hilbert key of the
+    bbox center (the R-tree bulk-load order), then the attributes."""
+    import pyarrow as pa
+
+    from ..geo import kernels
+    from ..geo.wkt import parse_wkt_batch
+    from .flatgeobuf import hilbert_from_lonlat
+
+    batch = parse_wkt_batch(rb.column(wkt_col).to_pandas())
     bb = kernels.bboxes(batch)
-    idx = np.nonzero(batch.gtype != -1)[0]
-    val_cols = []
-    for c in col_names:
-        s = pdf[c]
-        lst = s.astype(object).where(s.notna(), None).tolist()
-        val_cols.append([v.item() if isinstance(v, np.generic) else v for v in lst])
+    blobs = gpkg_blobs(batch, bb)
+    keep = blobs.is_valid()
+    idx = np.nonzero(keep.to_numpy(zero_copy_only=False))[0]
+    hk = hilbert_from_lonlat((bb[idx, 0] + bb[idx, 2]) / 2.0, (bb[idx, 1] + bb[idx, 3]) / 2.0)
+    arrays = [
+        blobs.filter(keep),
+        pa.array(batch.gtype[idx].astype("int32")),
+        *(pa.array(bb[idx, j]) for j in range(4)),
+        pa.array(hk.astype("int64")),
+    ] + [rb.column(c).filter(keep) for c in col_names]
+    return pa.record_batch(arrays, names=_SCRATCH + col_names)
+
+
+def _rows(rb):
+    """Encoded record batch -> (INSERT rows of blob + attributes, geometry
+    types, (k, 4) bboxes, Hilbert keys). Arrow ``to_pylist`` hands SQLite
+    exact Python scalars (ints stay exact beyond 2^53, nulls are None)."""
+    cols = [rb.column(i) for i in range(rb.num_columns)]
+    rows = list(zip(cols[0].to_pylist(), *(c.to_pylist() for c in cols[7:])))
+    bb = np.stack([c.to_numpy(zero_copy_only=False) for c in cols[2:6]], axis=1)
+    return rows, cols[1].to_numpy(zero_copy_only=False), bb, cols[6].to_numpy(zero_copy_only=False)
+
+
+def _build_gpkg(path, layer, columns, parts, spatial_index, last_change):
+    """Create one complete .gpkg from ``parts`` (an iterable of
+    :func:`_rows` tuples, in fid order): OGC 12-128r19 metadata tables,
+    the feature layer, and the R-tree index when requested and SQLite has
+    rtree. Atomic via an attempt-unique tmp, which a failure removes.
+    Returns (feature count, data envelope [minx,miny,maxx,maxy] or None)."""
+    from ..geo.wkt import GT_MULTIPOLYGON, GT_POINT, GT_POLYGON
     from ..pdexact import attempt_tmp
 
-    tmp = attempt_tmp(path)
     gnames = {GT_POINT: "POINT", GT_POLYGON: "POLYGON", GT_MULTIPOLYGON: "MULTIPOLYGON"}
+    col_names = [c for c, _ in columns]
+    tmp = attempt_tmp(path)
     db = sqlite3.connect(tmp)
     try:
         _bulk_pragmas(db)
@@ -488,49 +507,39 @@ def write_gpkg_pandas(
             f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, '
             f"geom BLOB{', ' + cols_sql if cols_sql else ''})"
         )
-        placeholders = ", ".join(["?"] * (1 + len(col_names)))
-        quoted_cols = ", ".join(f'"{c}"' for c in col_names)
-        rows = [
-            (
-                gp_header(4326, (bb[i, 0], bb[i, 1], bb[i, 2], bb[i, 3]))
-                + bytes(wkb[i]),
-                *(col[i] for col in val_cols),
-            )
-            for i in idx
-        ]
         rt = _rtree_begin(db, layer) if spatial_index else None
-        if rows:
-            db.executemany(
-                f'INSERT INTO "{layer}" (geom{"," if col_names else ""}'
-                f"{quoted_cols}) VALUES ({placeholders})",
-                rows,
-            )
+        quoted_cols = ", ".join(f'"{c}"' for c in col_names)
+        insert_frag = f'INTO "{layer}" (geom{"," if col_names else ""}{quoted_cols})'
+        n = 0
+        seen: set[int] = set()
+        env = [float("inf"), float("inf"), float("-inf"), float("-inf")]
+        rtree_bbs: list[np.ndarray] = []
+        rtree_hks: list[np.ndarray] = []
+        for rows, gtypes, bb, hk in parts:
+            if not rows:
+                continue
+            seen.update(int(t) for t in np.unique(gtypes))
+            _bulk_insert(db, insert_frag, rows)
             if rt is not None:
-                # fids are AUTOINCREMENT 1..n in insert order (= idx order)
-                _rtree_bulk_load(
-                    db, rt, np.arange(1, len(idx) + 1, dtype=np.int64),
-                    bb[idx],
-                )
+                rtree_bbs.append(bb)
+                rtree_hks.append(hk)
+            n += len(rows)
+            env = [min(env[0], float(bb[:, 0].min())), min(env[1], float(bb[:, 1].min())),
+                   max(env[2], float(bb[:, 2].max())), max(env[3], float(bb[:, 3].max()))]
+        if rt is not None and n:
+            # fids are AUTOINCREMENT 1..n in insert order
+            _rtree_bulk_load(
+                db, rt, np.arange(1, n + 1, dtype=np.int64),
+                np.concatenate(rtree_bbs), hkeys=np.concatenate(rtree_hks),
+            )
         if rt is not None:
             _rtree_finish(db, layer)
-        n = len(rows)
-        env = (
-            [float(bb[idx, 0].min()), float(bb[idx, 1].min()),
-             float(bb[idx, 2].max()), float(bb[idx, 3].max())]
-            if n
-            else None
-        )
-        seen = {int(t) for t in np.unique(batch.gtype[idx])} if n else set()
-        gtype_name = gnames[next(iter(seen))] if len(seen) == 1 else "GEOMETRY"
+        env = env if n else None
         db.execute(
             "INSERT INTO gpkg_contents VALUES (?,?,?,?,?,?,?,?,?,?)",
-            (
-                layer, "features", layer, "", last_change,
-                env[0] if n else None, env[1] if n else None,
-                env[2] if n else None, env[3] if n else None,
-                4326,
-            ),
+            (layer, "features", layer, "", last_change, *(env or [None] * 4), 4326),
         )
+        gtype_name = gnames[next(iter(seen))] if len(seen) == 1 else "GEOMETRY"
         db.execute(
             "INSERT INTO gpkg_geometry_columns VALUES (?,?,?,?,?,?)",
             (layer, "geom", gtype_name, 4326, 0, 0),
@@ -539,12 +548,33 @@ def write_gpkg_pandas(
     except BaseException:
         db.close()
         if os.path.exists(tmp):
-            os.remove(tmp)  # same no-orphan rule as write_gpkg
+            os.remove(tmp)  # never leak a multi-GB hidden .inprogress file
         raise
-    else:
-        db.close()
+    db.close()
     os.replace(tmp, path)
     return n, env
+
+
+def write_gpkg_shard(
+    batches,
+    path: str,
+    columns: list[tuple[str, str]],
+    wkt_col: str = "wkt",
+    layer: str | None = None,
+    last_change: str = "2023-05-30T00:00:00Z",
+    spatial_index: bool = True,
+) -> tuple[int, list[float] | None]:
+    """One shard's Arrow batches -> one complete .gpkg file (OGC
+    12-128r19 metadata tables + feature layer + R-tree spatial index
+    when SQLite's rtree module is available; ``spatial_index=False``
+    skips it). The executor-side builder behind sharded export;
+    ``columns`` must come from :func:`gpkg_columns` on the Spark schema.
+    Returns (feature count, data envelope [minx,miny,maxx,maxy] or None)
+    for the shard manifest."""
+    col_names = [c for c, _ in columns]
+    parts = (_rows(_encode_batch(rb, wkt_col, col_names)) for rb in batches)
+    layer = layer or os.path.splitext(os.path.basename(path))[0]
+    return _build_gpkg(path, layer, columns, parts, spatial_index, last_change)
 
 
 def write_gpkg(
@@ -557,10 +587,11 @@ def write_gpkg(
 ) -> int:
     """DataFrame (WKT geometry + scalar columns) -> single .gpkg file.
 
-    Distributed encode: one mapInArrow pass parses WKT, emits per-row WKB +
-    per-row bbox into scratch parquet parts; the driver then streams those
-    parts into SQLite (executemany per Arrow batch). Rows without geometry
-    are skipped. Returns the feature count.
+    Distributed encode: one mapInArrow pass parses WKT and emits the
+    complete GeoPackageBinary blobs + bboxes into scratch parquet parts;
+    the driver then streams those parts into SQLite (multi-row INSERTs
+    per Arrow batch). Rows without geometry are skipped. Returns the
+    feature count.
 
     ``spatial_index`` (default True, matching GDAL-written files) builds
     the ``gpkg_rtree_index`` extension; SQLite rtree inserts cost ~12
@@ -568,219 +599,79 @@ def write_gpkg(
     False when write latency matters more than windowed-read speed (the
     engine's own ``gpkg_bbox_search`` degrades to an envelope scan).
     """
-    import pyarrow as pa
     import pyarrow.dataset as pads
-
-    from ..geo import kernels
-    from ..geo.wkt import GT_MULTIPOLYGON, GT_POINT, GT_POLYGON, parse_wkt_batch, wkb_from_batch
 
     layer = layer or os.path.splitext(os.path.basename(path))[0]
     columns = gpkg_columns(df.schema.fields, wkt_col)
     col_names = [c for c, _ in columns]
-    widx = df.columns.index(wkt_col)
-    cidx = [df.columns.index(c) for c in col_names]
-
     scratch = path + ".parts"
     if os.path.exists(scratch):
         shutil.rmtree(scratch)
-
-    # internal scratch columns carry a reserved prefix so a user attribute
-    # named 'geom'/'minx'/... cannot produce a duplicate-column scratch schema
-    _g, _t, _x0, _y0, _x1, _y1, _h = (
-        "__obs_geom", "__obs_gtype", "__obs_minx", "__obs_miny",
-        "__obs_maxx", "__obs_maxy", "__obs_hkey",
-    )
-    clash = {_g, _t, _x0, _y0, _x1, _y1, _h} & set(col_names)
+    clash = set(_SCRATCH) & set(col_names)
     if clash:
         raise ValueError(f"column names collide with internal scratch: {sorted(clash)}")
-    out_schema = (
-        f"{_g} binary, {_t} int, {_x0} double, {_y0} double, "
-        f"{_x1} double, {_y1} double, {_h} long, "
-        + ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in col_names)
+    out_schema = ", ".join(
+        [f"{c} {t}" for c, t in zip(_SCRATCH, ["binary", "int"] + ["double"] * 4 + ["long"])]
+        + [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in col_names]
     )
 
     def enc(batches):
         for rb in batches:
-            batch = parse_wkt_batch(rb.column(widx).to_pandas())
-            wkb = wkb_from_batch(batch)
-            bb = kernels.bboxes(batch)
-            keep = batch.gtype != -1
-            idx = np.nonzero(keep)[0]
-            if not len(idx):
-                continue
-            # ship the COMPLETE GeoPackageBinary blob (header + wkb): the
-            # header build is vectorized and runs here in parallel, so the
-            # single-writer driver loop is left with nothing per-row but
-            # the executemany itself
-            hdrs = gp_headers_np(4326, bb[idx])
-            # Hilbert sort key for the rtree bulk load, computed HERE in
-            # the parallel pass instead of on the single-writer driver
-            from .flatgeobuf import hilbert_from_lonlat
-
-            hk = hilbert_from_lonlat(
-                (bb[idx, 0] + bb[idx, 2]) / 2.0,
-                (bb[idx, 1] + bb[idx, 3]) / 2.0,
-            ).astype("int64")
-            arrays = [
-                pa.array(
-                    [hdrs[k].tobytes() + bytes(wkb[i]) for k, i in enumerate(idx)],
-                    type=pa.binary(),
-                ),
-                pa.array(batch.gtype[idx].astype("int32")),
-                pa.array(bb[idx, 0]),
-                pa.array(bb[idx, 1]),
-                pa.array(bb[idx, 2]),
-                pa.array(bb[idx, 3]),
-                pa.array(hk),
-            ] + [rb.column(i).take(pa.array(idx)) for i in cidx]
-            yield pa.record_batch(
-                arrays, names=[_g, _t, _x0, _y0, _x1, _y1, _h] + col_names
-            )
+            out = _encode_batch(rb, wkt_col, col_names)
+            if out.num_rows:
+                yield out
 
     df.mapInArrow(enc, out_schema).write.mode("overwrite").parquet(scratch)
+    ds = pads.dataset(scratch, format="parquet")
 
-    gnames = {GT_POINT: "POINT", GT_POLYGON: "POLYGON", GT_MULTIPOLYGON: "MULTIPOLYGON"}
-    from ..pdexact import attempt_tmp
+    # a one-thread prefetcher decodes/prepares the NEXT batch while
+    # SQLite executes the current multi-row INSERTs: executemany and
+    # the arrow decode both release the GIL, so the single-writer
+    # funnel overlaps its python prep with its C execution
+    from queue import Full, Queue
+    from threading import Event, Thread
 
-    tmp = attempt_tmp(path)
-    db = sqlite3.connect(tmp)
-    try:
-        _bulk_pragmas(db)
-        _init_gpkg(db)
-        cols_sql = ", ".join(f'"{c}" {t}' for c, t in columns)
-        db.execute(
-            f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, '
-            f"geom BLOB{', ' + cols_sql if cols_sql else ''})"
-        )
-        rt = _rtree_begin(db, layer) if spatial_index else None
-        rtree_bbs: list[np.ndarray] = []
-        rtree_hks: list[np.ndarray] = []
-        n = 0
-        seen_types: set[int] = set()
-        gminx = gminy = float("inf")
-        gmaxx = gmaxy = float("-inf")
-        quoted_cols = ", ".join(f'"{c}"' for c in col_names)
-        insert_frag = (
-            f'INTO "{layer}" (geom{"," if col_names else ""}{quoted_cols})'
-        )
-        ds = pads.dataset(scratch, format="parquet")
+    _q: Queue = Queue(maxsize=2)
+    _stop = Event()
 
-        def _prep(rb):
-            # arrow to_pylist hands SQLite exact python scalars directly
-            # (ints stay exact beyond 2^53, nulls become None) — no pandas
-            # round-trip per batch
-            names = rb.schema.names
-            geoms_l = rb.column(names.index(_g)).to_pylist()
-            gtypes_np = rb.column(names.index(_t)).to_numpy(
-                zero_copy_only=False
-            )
-            bx0 = rb.column(names.index(_x0)).to_numpy(zero_copy_only=False)
-            by0 = rb.column(names.index(_y0)).to_numpy(zero_copy_only=False)
-            bx1 = rb.column(names.index(_x1)).to_numpy(zero_copy_only=False)
-            by1 = rb.column(names.index(_y1)).to_numpy(zero_copy_only=False)
-            hk = rb.column(names.index(_h)).to_numpy(zero_copy_only=False)
-            val_cols = [
-                rb.column(names.index(c)).to_pylist() for c in col_names
-            ]
-            # geoms arrive as COMPLETE GeoPackageBinary blobs (header
-            # prepended executor-side by enc) — zip, don't rebuild
-            rows = list(zip(geoms_l, *val_cols)) if val_cols else [
-                (g0,) for g0 in geoms_l
-            ]
-            return rows, gtypes_np, bx0, by0, bx1, by1, hk
-
-        # a one-thread prefetcher decodes/prepares the NEXT batch while
-        # SQLite executes the current multi-row INSERTs: executemany and
-        # the arrow decode both release the GIL, so the single-writer
-        # funnel overlaps its python prep with its C execution
-        from queue import Full, Queue
-        from threading import Event, Thread
-
-        _q: Queue = Queue(maxsize=2)
-        _stop = Event()
-
-        def _put(item) -> bool:
-            # bounded waits: a consumer that died (insert error) sets
-            # _stop, and the reader must not block on a full queue forever
-            while not _stop.is_set():
-                try:
-                    _q.put(item, timeout=0.05)
-                    return True
-                except Full:
-                    pass
-            return False
-
-        def _reader():
+    def _put(item) -> bool:
+        # bounded waits: a consumer that died (insert error) sets
+        # _stop, and the reader must not block on a full queue forever
+        while not _stop.is_set():
             try:
-                for rb in ds.to_batches():
-                    if not _put(("b", _prep(rb))):
-                        return
-            except BaseException as ex:  # surfaced in the consumer loop
-                _put(("e", ex))
-            else:
-                _put(("end", None))
+                _q.put(item, timeout=0.05)
+                return True
+            except Full:
+                pass
+        return False
 
-        _t_rd = Thread(target=_reader, daemon=True)
-        _t_rd.start()
+    def _reader():
         try:
-            while True:
-                kind, payload = _q.get()
-                if kind == "end":
-                    break
-                if kind == "e":
-                    raise payload
-                rows, gtypes_np, bx0, by0, bx1, by1, hk = payload
-                seen_types.update(int(t) for t in np.unique(gtypes_np))
-                if rows:
-                    _bulk_insert(db, insert_frag, rows)
-                    if rt is not None:
-                        rtree_bbs.append(
-                            np.stack([bx0, by0, bx1, by1], axis=1)
-                        )
-                        rtree_hks.append(hk)
-                    n += len(rows)
-                    gminx = min(gminx, float(bx0.min()))
-                    gminy = min(gminy, float(by0.min()))
-                    gmaxx = max(gmaxx, float(bx1.max()))
-                    gmaxy = max(gmaxy, float(by1.max()))
-        finally:
-            _stop.set()
-            _t_rd.join()
-        if rt is not None and rtree_bbs:
-            _rtree_bulk_load(
-                db, rt, np.arange(1, n + 1, dtype=np.int64),
-                np.concatenate(rtree_bbs),
-                hkeys=np.concatenate(rtree_hks),
-            )
-        if rt is not None:
-            _rtree_finish(db, layer)
-        gtype_name = (
-            gnames[next(iter(seen_types))] if len(seen_types) == 1 else "GEOMETRY"
-        )
-        db.execute(
-            "INSERT INTO gpkg_contents VALUES (?,?,?,?,?,?,?,?,?,?)",
-            (
-                layer, "features", layer, "", last_change,
-                gminx if n else None, gminy if n else None,
-                gmaxx if n else None, gmaxy if n else None, 4326,
-            ),
-        )
-        db.execute(
-            "INSERT INTO gpkg_geometry_columns VALUES (?,?,?,?,?,?)",
-            (layer, "geom", gtype_name, 4326, 0, 0),
-        )
-        db.commit()
-    except BaseException:
-        db.close()
-        if os.path.exists(tmp):
-            os.remove(tmp)  # never leak a multi-GB hidden .inprogress file
+            for rb in ds.to_batches():
+                if not _put(("b", _rows(rb))):
+                    return
+        except BaseException as ex:  # surfaced in the consumer loop
+            _put(("e", ex))
+        else:
+            _put(("end", None))
+
+    def _prefetched():
+        while True:
+            kind, payload = _q.get()
+            if kind == "end":
+                return
+            if kind == "e":
+                raise payload
+            yield payload
+
+    _t_rd = Thread(target=_reader, daemon=True)
+    _t_rd.start()
+    try:
+        return _build_gpkg(path, layer, columns, _prefetched(), spatial_index, last_change)[0]
+    finally:
+        _stop.set()
+        _t_rd.join()
         shutil.rmtree(scratch, ignore_errors=True)
-        raise
-    else:
-        db.close()
-    os.replace(tmp, path)
-    shutil.rmtree(scratch)
-    return n
 
 
 def _blob_to_wkt(blob: bytes) -> str | None:

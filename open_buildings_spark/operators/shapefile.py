@@ -14,6 +14,12 @@ Technical Description", 1998) plus dBASE III for attributes:
 - ``.dbf``: dBASE III — field descriptors (name <= 10 chars; C/N types) and
   fixed-width ASCII records.
 
+Encoding: one batch encoder, :func:`shp_records`, closes and orients the
+rings of every geometry in a batch and lays out all records with offset
+arithmetic; :func:`_dbf_column` encodes a dBASE column. ``write_shp`` and
+the sharded builder ``write_shp_shard`` assemble files from the same
+per-batch pieces.
+
 Scale shape: like the FGB sink, record ENCODING is distributed (mapInArrow
 to per-task scratch blobs for .shp payloads and .dbf rows); the driver
 assembles the three files (offsets depend on global record order — the
@@ -36,78 +42,59 @@ SHP_POLYGON = 5
 _HEADER_LEN = 100
 
 
-def _ring_signed_area(c: np.ndarray) -> float:
-    x, y = c[:, 0], c[:, 1]
-    return 0.5 * float(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
+def shp_records(batch):
+    """Shapefile records of a parsed batch: an Arrow ``binary`` array of
+    whole records (8-byte big-endian header with the record number left 0
+    for the writer to fill, then the content; null for rows without
+    geometry), the shape type per row (0 for none) and the (N, 4) bboxes.
 
-
-def _oriented(c: np.ndarray, clockwise: bool) -> np.ndarray:
-    """Close the ring and enforce orientation (shapefile: outer CW, hole CCW)."""
-    if not np.array_equal(c[0], c[-1]):
-        c = np.vstack([c, c[0]])
-    area = _ring_signed_area(c[:-1]) if len(c) > 3 else _ring_signed_area(c)
-    is_ccw = area > 0
-    if clockwise == is_ccw:  # wrong way round
-        c = c[::-1]
-    return c
-
-
-def _polygon_record(rings: list[tuple[np.ndarray, bool]]) -> bytes:
-    closed = [_oriented(c, clockwise=not hole) for c, hole in rings]
-    pts = np.concatenate(closed, axis=0)
-    parts = np.cumsum([0] + [len(r) for r in closed[:-1]])
-    return (
-        struct.pack("<i", SHP_POLYGON)
-        + struct.pack(
-            "<dddd",
-            float(pts[:, 0].min()), float(pts[:, 1].min()),
-            float(pts[:, 0].max()), float(pts[:, 1].max()),
-        )
-        + struct.pack("<ii", len(closed), len(pts))
-        + struct.pack(f"<{len(closed)}i", *parts.tolist())
-        + np.ascontiguousarray(pts, dtype="<f8").tobytes()
+    Points are type 1 (x, y). Every other geometry is a type-5 polygon:
+    bbox, part and point counts, part starts, then all of its rings, each
+    closed and oriented from its signed area (outer rings clockwise,
+    holes counter-clockwise)."""
+    from ..geo import kernels
+    from ..geo.wkt import (
+        GT_MISSING, GT_POINT, binary_array, put_xy, scatter, vertex_rings,
     )
 
-
-def _point_record(x: float, y: float) -> bytes:
-    return struct.pack("<i", SHP_POINT) + struct.pack("<dd", x, y)
-
-
-def _polygon_records_fast(coords3: np.ndarray) -> tuple[list, np.ndarray]:
-    """Vectorized :func:`_polygon_record` for the dominant shape — a batch
-    of CLOSED single-ring polygons sharing one ring length. ``coords3`` is
-    (m, L, 2); returns (per-row record bytes, (m, 4) bboxes). One
-    structured-array fill + one ``tobytes`` replaces m rounds of
-    struct.pack; byte-identical to the scalar encoder (outer ring
-    enforced clockwise via the same shoelace-on-open-ring test)."""
-    m, L, _ = coords3.shape
-    x = coords3[:, :-1, 0]
-    y = coords3[:, :-1, 1]
-    area = 0.5 * (
-        (x * np.roll(y, -1, axis=1)).sum(axis=1)
-        - (np.roll(x, -1, axis=1) * y).sum(axis=1)
-    )
-    pts = np.ascontiguousarray(coords3, dtype="<f8").copy()
-    flip = area > 0  # CCW outer ring -> reverse to clockwise
-    pts[flip] = pts[flip, ::-1, :]
-    dt = np.dtype(
-        [
-            ("st", "<i4"), ("bb", "<f8", 4), ("npn", "<i4", 2),
-            ("part", "<i4"), ("pts", "<f8", (L, 2)),
-        ]
-    )
-    arr = np.zeros(m, dtype=dt)
-    arr["st"] = SHP_POLYGON
-    arr["bb"][:, 0] = pts[:, :, 0].min(axis=1)
-    arr["bb"][:, 1] = pts[:, :, 1].min(axis=1)
-    arr["bb"][:, 2] = pts[:, :, 0].max(axis=1)
-    arr["bb"][:, 3] = pts[:, :, 1].max(axis=1)
-    arr["npn"][:, 0] = 1
-    arr["npn"][:, 1] = L
-    arr["pts"] = pts
-    buf = arr.tobytes()
-    sz = arr.itemsize
-    return [buf[i * sz : i * sz + sz] for i in range(m)], arr["bb"].copy()
+    c, ro, rg = batch.coords, batch.ring_offsets, batch.ring_geom
+    sizes = np.diff(ro)
+    bounds = np.searchsorted(rg, np.arange(batch.n_geoms + 1))
+    nrings = np.diff(bounds)
+    point = batch.gtype == GT_POINT
+    valid = (batch.gtype != GT_MISSING) & (nrings > 0)
+    closed = (c[ro[:-1]] == c[ro[1:] - 1]).all(axis=1)
+    n_out = sizes + ~closed
+    area = kernels._ring_shoelace(c[:, 0], c[:, 1], ro)[0]
+    flip = np.where(batch.ring_is_hole, area <= 0, area > 0)
+    cum = np.concatenate([[0], np.cumsum(n_out)])
+    first = cum[bounds[:-1]]
+    npts = cum[bounds[1:]] - first
+    content = np.where(point, 20, 44 + 4 * nrings + 16 * npts)
+    offsets = np.concatenate([[0], np.cumsum(np.where(valid, 8 + content, 0))])
+    buf = np.zeros(int(offsets[-1]), dtype=np.uint8)
+    at = offsets[:-1] + 8
+    stype = np.where(valid, np.where(point, SHP_POINT, SHP_POLYGON), 0)
+    bb = kernels.bboxes(batch)
+    v = np.nonzero(valid)[0]
+    scatter(buf, at[v] - 4, content[v] // 2, ">i4")
+    scatter(buf, at[v], stype[v], "<i4")
+    vp, vg = v[point[v]], v[~point[v]]
+    put_xy(buf, at[vp] + 4, c[ro[bounds[vp]]])
+    scatter(buf, (at[vg, None] + 4 + 8 * np.arange(4)).ravel(), bb[vg].ravel(), "<f8")
+    scatter(buf, at[vg] + 36, nrings[vg], "<i4")
+    scatter(buf, at[vg] + 40, npts[vg], "<i4")
+    r = np.nonzero(valid[rg] & ~point[rg])[0]
+    g = rg[r]
+    scatter(buf, at[g] + 44 + 4 * (r - bounds[g]), cum[r] - first[g], "<i4")
+    ring_at = (at + 44 + 4 * nrings - 16 * first)[rg] + 16 * cum[:-1]
+    ring, local = vertex_rings(batch)
+    keep = (valid & ~point)[rg][ring]
+    slot = np.where(flip[ring], n_out[ring] - 1 - local, local)
+    put_xy(buf, (ring_at[ring] + 16 * slot)[keep], c[keep])
+    o = r[~closed[r]]  # rings stored open get their first vertex again
+    put_xy(buf, ring_at[o] + 16 * np.where(flip[o], 0, sizes[o]), c[ro[o]])
+    return binary_array(buf, offsets, valid), stype, bb
 
 
 def dbf_field_name(name: str) -> str:
@@ -146,46 +133,25 @@ def _dbf_fields(columns) -> list[tuple[str, str, int, int]]:
     return out
 
 
-def _dbf_value(v, ftype: str, length: int, dec: int) -> bytes:
-    if v is None or v is pd.NA or (isinstance(v, float) and np.isnan(v)):
-        return b" " * length if ftype != "L" else b"?"
-    if ftype == "C":
-        b = str(v).encode("utf-8", "replace")[:length]
-        return b + b" " * (length - len(b))
-    if ftype == "L":
-        return b"T" if v else b"F"
-    if dec:
-        s = f"{float(v):.{dec}f}"
-    else:
-        s = str(int(v))
-    if len(s) > length:
-        # never truncate digits — a chopped number is silent corruption
-        raise ValueError(
-            f"value {s!r} does not fit DBF numeric field width {length}"
-        )
-    return s.rjust(length).encode("ascii")
+def _dbf_column(arr, ftype: str, flen: int, dec: int) -> np.ndarray:
+    """One Arrow column -> its dBASE cells as an ``S{flen}`` array
+    (fixed-width, space-padded; a null or NaN is blank, or ``?`` for a
+    logical). Character values are cut at ``flen`` bytes; a number that
+    does not fit raises instead of being cut."""
+    from ..pdexact import present
 
-
-def _dbf_column(s: pd.Series, ftype: str, flen: int, dec: int) -> np.ndarray:
-    """Vectorized :func:`_dbf_value` for a whole column -> ``S{flen}``
-    array (fixed-width, space-padded, byte-identical to the scalar
-    encoder). The single-file driver assembly calls this once per column
-    per batch instead of once per cell — the per-row Python loop was the
-    export's bottleneck at millions of rows."""
-    k = len(s)
+    k = len(arr)
+    mask = present(arr)
     if ftype == "L":
         out = np.full(k, b"?", dtype="S1")
-        mask = s.notna().to_numpy()
-        vals = np.zeros(k, dtype=bool)
-        vals[mask] = np.asarray(s.to_numpy(object)[mask], dtype=bool)
+        vals = arr.fill_null(False).to_numpy(zero_copy_only=False)
         out[mask & vals] = b"T"
         out[mask & ~vals] = b"F"
         return out
     out = np.full(k, b" " * flen, dtype=f"S{flen}")
-    mask = s.notna().to_numpy()
     if not mask.any():
         return out
-    vals = s.to_numpy(object)[mask]
+    vals = arr.fill_null("" if ftype == "C" else 0).to_numpy(zero_copy_only=False)[mask]
     if ftype == "C":
         u = np.asarray(vals, dtype="U")
         enc = np.char.encode(u, "utf-8", "replace")
@@ -226,14 +192,98 @@ def shp_columns(schema_fields, wkt_col: str) -> list[tuple[str, str]]:
     return columns
 
 
-def _assemble_shp(base, shp_records, shx_records, dbf_records, fields, n,
-                  shape_type, bbox) -> None:
-    """Write the .shp/.shx/.dbf triple from accumulated record bytes.
-    Each file lands via an attempt-unique tmp + atomic rename, so a killed
-    or concurrent attempt never leaves a truncated/interleaved final."""
+_PIECE = [
+    "__obs_shp", "__obs_lens", "__obs_dbf", "__obs_stypes",
+    "__obs_minx", "__obs_miny", "__obs_maxx", "__obs_maxy",
+]
+
+
+def _encode_batch(rb, wkt_col: str, columns, fields):
+    """One Arrow batch -> the piece both writers assemble files from:
+    (records with record number 0, >i4 content lengths, dBASE rows, shape
+    types, minx, miny, maxx, maxy) over its rows with geometry; None when
+    it has none."""
+    import pyarrow as pa
+
+    from ..geo.wkt import binary_buffers, parse_wkt_batch
+
+    recs, stype, bb = shp_records(parse_wkt_batch(rb.column(wkt_col).to_pandas()))
+    keep = stype > 0
+    if not keep.any():
+        return None
+    offs, data = binary_buffers(recs)
+    rows = np.empty(int(keep.sum()), dtype=[("_del", "S1")] + [
+        (f"f{i}", f"S{fl}") for i, (_, _, fl, _) in enumerate(fields)
+    ])
+    rows["_del"] = b" "
+    for i, ((name, _), (_, ftype, flen, fdec)) in enumerate(zip(columns, fields)):
+        try:
+            rows[f"f{i}"] = _dbf_column(
+                rb.column(name).filter(pa.array(keep)), ftype, flen, fdec
+            )
+        except ValueError as ex:
+            raise ValueError(f"DBF column {name!r}: {ex}") from None
+    bb = bb[keep]
+    return (
+        data[offs[0] : offs[-1]].tobytes(),
+        (np.diff(offs)[keep] - 8).astype(">i4").tobytes(),
+        rows.tobytes(),
+        ",".join(str(t) for t in np.unique(stype[keep])),
+        float(bb[:, 0].min()), float(bb[:, 1].min()),
+        float(bb[:, 2].max()), float(bb[:, 3].max()),
+    )
+
+
+def _assemble_shp(base: str, pieces, fields) -> tuple[int, list[float] | None]:
+    """Write the .shp/.shx/.dbf triple from encoded pieces in file order:
+    the global record numbers are patched into each piece's record headers
+    and the .shx table is built from its content lengths. Raises before any
+    file is opened when shape types mix or the files would pass the
+    format's 2 GiB cap. Each file lands via an attempt-unique tmp + atomic
+    rename. Returns (record count, envelope or None)."""
+    from ..geo.wkt import scatter
     from ..pdexact import attempt_tmp
 
-    minx, miny, maxx, maxy = bbox
+    shp, shx, dbf = bytearray(), bytearray(), bytearray()
+    n = 0
+    env = [float("inf"), float("inf"), float("-inf"), float("-inf")]
+    shape_type = None
+    offset_words = _HEADER_LEN // 2
+    rec_size = 1 + sum(fl for _, _, fl, _ in fields)
+    hdr_size = 32 + 32 * len(fields) + 1
+    for blob, lens, rows, stypes, *bbox in pieces:
+        clens = np.frombuffer(lens, dtype=">i4").astype(np.int64) // 2
+        k = len(clens)
+        types = {int(t) for t in stypes.split(",")}
+        shape_type = min(types) if shape_type is None else shape_type
+        if types != {shape_type}:
+            raise ValueError("shapefile cannot mix point and polygon shapes")
+        blob = np.frombuffer(bytearray(blob), dtype=np.uint8)
+        starts = np.concatenate([[0], np.cumsum(8 + 2 * clens)[:-1]])
+        scatter(blob, starts, np.arange(n + 1, n + k + 1), ">i4")
+        shp += memoryview(blob)
+        sx = np.empty((k, 2), dtype=">i4")
+        sx[:, 0] = offset_words + np.concatenate([[0], np.cumsum(4 + clens)[:-1]])
+        sx[:, 1] = clens
+        shx += sx.tobytes()
+        offset_words += int((4 + clens).sum())
+        n += k
+        if (
+            _HEADER_LEN + len(shp) > SHP_MAX_BYTES
+            or hdr_size + rec_size * n + 1 > SHP_MAX_BYTES
+        ):
+            # every internal offset is signed-32 in 16-bit words
+            raise ValueError(
+                "output exceeds the shapefile format's 2 GiB cap; use "
+                "sharded_export (one file per quadkey shard, deeper levels "
+                "for smaller shards) or FlatGeobuf for data this size"
+            )
+        env = [min(env[0], bbox[0]), min(env[1], bbox[1]),
+               max(env[2], bbox[2]), max(env[3], bbox[3])]
+        dbf += rows
+    if shape_type is None:
+        shape_type = SHP_POLYGON
+        env = [0.0, 0.0, 0.0, 0.0]
 
     def header(total_words: int) -> bytes:
         return (
@@ -241,7 +291,7 @@ def _assemble_shp(base, shp_records, shx_records, dbf_records, fields, n,
             + b"\x00" * 20
             + struct.pack(">i", total_words)
             + struct.pack("<ii", 1000, shape_type)
-            + struct.pack("<dddd", minx, miny, maxx, maxy)
+            + struct.pack("<dddd", *env)
             + struct.pack("<dddd", 0.0, 0.0, 0.0, 0.0)
         )
 
@@ -252,106 +302,37 @@ def _assemble_shp(base, shp_records, shx_records, dbf_records, fields, n,
             f.write(payload)
         os.replace(tmp, final)
 
-    commit(".shp", header((_HEADER_LEN + len(shp_records)) // 2) + bytes(shp_records))
-    commit(".shx", header((_HEADER_LEN + len(shx_records)) // 2) + bytes(shx_records))
-
-    rec_size = 1 + sum(fl for _, _, fl, _ in fields)
-    hdr_size = 32 + 32 * len(fields) + 1
-    dbf = bytearray()
-    dbf += bytes([0x03, 95, 5, 30])  # dBASE III, fixed date (deterministic)
-    dbf += struct.pack("<i", n)
-    dbf += struct.pack("<HH", hdr_size, rec_size)
-    dbf += b"\x00" * 20
+    commit(".shp", header((_HEADER_LEN + len(shp)) // 2) + bytes(shp))
+    commit(".shx", header((_HEADER_LEN + len(shx)) // 2) + bytes(shx))
+    head = bytearray()
+    head += bytes([0x03, 95, 5, 30])  # dBASE III, fixed date (deterministic)
+    head += struct.pack("<i", n)
+    head += struct.pack("<HH", hdr_size, rec_size)
+    head += b"\x00" * 20
     for fname, ftype, flen, fdec in fields:
-        dbf += fname.encode("ascii").ljust(11, b"\x00")
-        dbf += ftype.encode("ascii")
-        dbf += b"\x00" * 4
-        dbf += bytes([flen, fdec])
-        dbf += b"\x00" * 14
-    dbf += b"\x0d"
-    dbf += dbf_records
-    dbf += b"\x1a"
-    commit(".dbf", bytes(dbf))
+        head += fname.encode("ascii").ljust(11, b"\x00")
+        head += ftype.encode("ascii")
+        head += b"\x00" * 4
+        head += bytes([flen, fdec])
+        head += b"\x00" * 14
+    commit(".dbf", bytes(head) + b"\x0d" + bytes(dbf) + b"\x1a")
+    return n, (env if n else None)
 
 
-def write_shp_pandas(
-    pdf: pd.DataFrame,
+def write_shp_shard(
+    batches,
     path: str,
     columns: list[tuple[str, str]],
     wkt_col: str = "wkt",
 ) -> tuple[int, list[float] | None]:
-    """One in-memory pandas frame -> one .shp/.shx/.dbf triple. The
+    """One shard's Arrow batches -> one .shp/.shx/.dbf triple. The
     executor-side builder behind sharded export; ``columns`` must come
-    from :func:`shp_columns` on the SPARK schema. Returns (feature
-    count, data envelope [minx,miny,maxx,maxy] or None) for the shard
-    manifest."""
-    from ..geo.wkt import GT_POINT, parse_wkt_batch
-
-    base = path[:-4] if path.endswith(".shp") else path
+    from :func:`shp_columns` on the Spark schema. Returns (feature count,
+    data envelope [minx,miny,maxx,maxy] or None) for the shard manifest."""
     fields = _dbf_fields(columns)
-    col_names = [c for c, _ in columns]
-    val_cols = []
-    for c in col_names:
-        s = pdf[c]
-        val_cols.append(s.astype(object).where(s.notna(), None).tolist())
-    batch = parse_wkt_batch(pdf[wkt_col])
-    bounds = np.searchsorted(batch.ring_geom, np.arange(batch.n_geoms + 1))
-    shp_records = bytearray()
-    shx_records = bytearray()
-    dbf_records = bytearray()
-    n = 0
-    minx = miny = float("inf")
-    maxx = maxy = float("-inf")
-    shape_type = None
-    offset_words = _HEADER_LEN // 2
-    for g in range(batch.n_geoms):
-        gt = int(batch.gtype[g])
-        if gt == -1:
-            continue
-        rings = [
-            (batch.ring(r), bool(batch.ring_is_hole[r]))
-            for r in range(bounds[g], bounds[g + 1])
-        ]
-        if gt == GT_POINT:
-            rec = _point_record(rings[0][0][0, 0], rings[0][0][0, 1])
-            st = SHP_POINT
-            bx0, by0, bx1, by1 = (rings[0][0][0, 0], rings[0][0][0, 1]) * 2
-        else:
-            rec = _polygon_record(rings)
-            st = SHP_POLYGON
-            bx0, by0, bx1, by1 = struct.unpack_from("<dddd", rec, 4)
-        if shape_type is None:
-            shape_type = st
-        elif shape_type != st:
-            raise ValueError("shapefile cannot mix point and polygon shapes")
-        n += 1
-        clen = len(rec) // 2
-        shp_records += struct.pack(">ii", n, clen) + rec
-        shx_records += struct.pack(">ii", offset_words, clen)
-        offset_words += 4 + clen
-        minx, miny = min(minx, bx0), min(miny, by0)
-        maxx, maxy = max(maxx, bx1), max(maxy, by1)
-        row = b" "
-        for (fname, ftype, flen, fdec), col in zip(fields, val_cols):
-            row += _dbf_value(col[g], ftype, flen, fdec)
-        dbf_records += row
-    if shape_type is None:
-        shape_type = SHP_POLYGON
-        minx = miny = maxx = maxy = 0.0
-    dbf_size = 32 + 32 * len(fields) + 1 + len(dbf_records) + 1
-    if (
-        _HEADER_LEN + len(shp_records) > SHP_MAX_BYTES
-        or dbf_size > SHP_MAX_BYTES
-    ):
-        raise ValueError(
-            "shapefile shard exceeds the format's 2 GiB cap; use a deeper "
-            "shard level"
-        )
-    _assemble_shp(
-        base, shp_records, shx_records, dbf_records, fields, n, shape_type,
-        (minx, miny, maxx, maxy),
-    )
-    return n, ([minx, miny, maxx, maxy] if n else None)
+    pieces = (_encode_batch(rb, wkt_col, columns, fields) for rb in batches)
+    base = path[:-4] if path.endswith(".shp") else path
+    return _assemble_shp(base, (p for p in pieces if p is not None), fields)
 
 
 def write_shp(df, path: str, wkt_col: str = "wkt") -> int:
@@ -359,249 +340,47 @@ def write_shp(df, path: str, wkt_col: str = "wkt") -> int:
     (pass 'out.shp'; siblings are derived). One shape type per file: POINT
     corpora write type 1, everything else type 5 (polygon/multipolygon);
     mixing points with polygons raises, like GDAL's shapefile driver.
-    Null/invalid geometries are skipped. Returns feature count."""
+    Null/invalid geometries are skipped. Returns feature count.
+
+    Records and dBASE rows are encoded executor-side, one piece per Arrow
+    batch, into scratch parquet; the driver assembles the three files from
+    the pieces in order (offsets depend on global record order)."""
     import pyarrow as pa
     import pyarrow.dataset as pads
-
-    from ..geo.wkt import GT_POINT, parse_wkt_batch
 
     base = path[:-4] if path.endswith(".shp") else path
     columns = shp_columns(df.schema.fields, wkt_col)
     fields = _dbf_fields(columns)
-    col_names = [c for c, _ in columns]
-    widx = df.columns.index(wkt_col)
-    cidx = [df.columns.index(c) for c in col_names]
-
     scratch = base + ".shp.parts"
     if os.path.exists(scratch):
         shutil.rmtree(scratch)
 
-    from ..pdexact import int_types_mapper
-
-    _intmap = int_types_mapper()
-    dbf_dtype = np.dtype(
-        [("_del", "S1")]
-        + [(f"f{i}", f"S{fl}") for i, (_, _, fl, _) in enumerate(fields)]
-    )
-
     def enc(batches):
         for rb in batches:
-            batch = parse_wkt_batch(rb.column(widx).to_pandas())
-            ng = batch.n_geoms
-            bounds = np.searchsorted(batch.ring_geom, np.arange(ng + 1))
-            ro = batch.ring_offsets
-            coords = batch.coords
-            nrings = bounds[1:] - bounds[:-1]
-            # FAST PATH: closed single-ring polygons (the dominant shape)
-            # encode as one structured-array fill per ring-length group;
-            # points / multis / holes / degenerates take the scalar path
-            # clamp the first-ring index: geoms with no rings (null/garbage
-            # WKT) get a placeholder that must stay in bounds even when the
-            # whole batch has zero rings — they are masked out via `one`
-            fr = np.minimum(bounds[:-1], max(batch.n_rings - 1, 0))
-            rlen = np.zeros(ng, dtype=np.int64)
-            if batch.n_rings:
-                rlen = ro[fr + 1] - ro[fr]
-            closed = np.zeros(ng, dtype=bool)
-            one = (nrings == 1) & (rlen > 3)
-            if one.any():
-                st = ro[fr[one]]
-                en = ro[fr[one] + 1] - 1
-                closed[one] = (coords[st] == coords[en]).all(axis=1)
-            elig = (
-                one & closed & (batch.gtype != GT_POINT) & (batch.gtype != -1)
-            )
-            if batch.n_rings:
-                elig &= ~batch.ring_is_hole[fr]
-            rec_by_g: list = [None] * ng
-            bb_by_g = np.zeros((ng, 4), dtype=np.float64)
-            for L in np.unique(rlen[elig]) if elig.any() else []:
-                gsel = np.nonzero(elig & (rlen == L))[0]
-                starts = ro[fr[gsel]]
-                coords3 = coords[starts[:, None] + np.arange(L)]
-                fast_recs, fast_bb = _polygon_records_fast(coords3)
-                for j, g in enumerate(gsel):
-                    rec_by_g[g] = fast_recs[j]
-                bb_by_g[gsel] = fast_bb
-            rings_of: dict[int, list] = {}
-            for r in range(batch.n_rings):
-                g = int(batch.ring_geom[r])
-                if not elig[g]:
-                    rings_of.setdefault(g, []).append(
-                        (batch.ring(r), bool(batch.ring_is_hole[r]))
-                    )
-            recs, types, keep, bbs = [], [], [], []
-            for g in range(ng):
-                gt = int(batch.gtype[g])
-                if gt == -1:
-                    continue
-                if rec_by_g[g] is not None:
-                    recs.append(rec_by_g[g])
-                    types.append(SHP_POLYGON)
-                    bbs.append(tuple(bb_by_g[g]))
-                    keep.append(g)
-                    continue
-                rings = rings_of.get(g, [])
-                if gt == GT_POINT:
-                    x, y = rings[0][0][0, 0], rings[0][0][0, 1]
-                    recs.append(_point_record(x, y))
-                    types.append(SHP_POINT)
-                    bbs.append((x, y, x, y))
-                else:
-                    rec = _polygon_record(rings)
-                    recs.append(rec)
-                    types.append(SHP_POLYGON)
-                    bbs.append(struct.unpack_from("<dddd", rec, 4))
-                keep.append(g)
-            if not keep:
-                continue
-            idx = pa.array(np.asarray(keep, dtype=np.int64))
-            bb = np.asarray(bbs, dtype=np.float64)
-            k = len(keep)
-            # assemble the whole batch EXECUTOR-side into three blobs (the
-            # former driver loop — per-record header slices, np.char .dbf
-            # encodes — was the single-writer bottleneck at millions of
-            # rows; the driver is left with one 4-byte record-number
-            # scatter per batch plus blob appends):
-            #   shp blob: records with clen pre-filled, recnum=0 patched
-            #             at the driver (global order)
-            #   lens:     per-record byte lengths (>i4) for header
-            #             positions and the .shx table
-            #   dbf blob: fixed-width dBASE rows via the vectorized
-            #             column encoder (types_mapper keeps nullable
-            #             ints exact beyond 2^53)
-            lens = np.fromiter((len(r) for r in recs), dtype=np.int64, count=k)
-            clens = lens // 2
-            hdr = np.zeros((k, 2), dtype=">i4")
-            hdr[:, 1] = clens
-            hb = hdr.tobytes()
-            pieces: list = [None] * (2 * k)
-            pieces[0::2] = [hb[i * 8 : i * 8 + 8] for i in range(k)]
-            pieces[1::2] = recs
-            shp_blob = b"".join(pieces)
-            pdf = rb.select(cidx).to_pandas(types_mapper=_intmap)
-            rec_arr = np.empty(k, dtype=dbf_dtype)
-            rec_arr["_del"] = b" "
-            for i, (cn, (_, ftype, flen, fdec)) in enumerate(
-                zip(col_names, fields)
-            ):
-                try:
-                    rec_arr[f"f{i}"] = _dbf_column(
-                        pdf[cn].iloc[keep].reset_index(drop=True), ftype, flen, fdec
-                    )
-                except ValueError as ex:
-                    raise ValueError(f"DBF column {cn!r}: {ex}") from None
-            stypes = ",".join(str(t) for t in sorted(set(types)))
-            yield pa.record_batch(
-                [
-                    pa.array([shp_blob], type=pa.binary()),
-                    pa.array([lens.astype(">i4").tobytes()], type=pa.binary()),
-                    pa.array([rec_arr.tobytes()], type=pa.binary()),
-                    pa.array([stypes]),
-                    pa.array([float(bb[:, 0].min())]),
-                    pa.array([float(bb[:, 1].min())]),
-                    pa.array([float(bb[:, 2].max())]),
-                    pa.array([float(bb[:, 3].max())]),
-                ],
-                names=[
-                    "__obs_shp", "__obs_lens", "__obs_dbf", "__obs_stypes",
-                    "__obs_minx", "__obs_miny", "__obs_maxx", "__obs_maxy",
-                ],
-            )
+            piece = _encode_batch(rb, wkt_col, columns, fields)
+            if piece is not None:
+                yield pa.record_batch([pa.array([v]) for v in piece], names=_PIECE)
 
-    out_schema = (
-        "__obs_shp binary, __obs_lens binary, __obs_dbf binary, "
-        "__obs_stypes string, __obs_minx double, __obs_miny double, "
-        "__obs_maxx double, __obs_maxy double"
+    out_schema = ", ".join(
+        f"{c} {t}" for c, t in zip(_PIECE, ["binary"] * 3 + ["string"] + ["double"] * 4)
     )
     try:
         df.mapInArrow(enc, out_schema).write.mode("overwrite").parquet(scratch)
+        pieces = (
+            piece
+            for rb in pads.dataset(scratch, format="parquet").to_batches()
+            for piece in zip(*(col.to_pylist() for col in rb.columns))
+        )
+        return _assemble_shp(base, pieces, fields)[0]
     except Exception as ex:
-        shutil.rmtree(scratch, ignore_errors=True)
         # an executor-side DBF overflow arrives wrapped in a Spark task
         # failure: surface the clean ValueError it is
         hit = re.search(r"ValueError: (DBF column [^\n]*)", str(ex))
-        if hit is None:
+        if hit is None or isinstance(ex, ValueError):
             raise
         raise ValueError(hit.group(1)) from None
-
-    ds = pads.dataset(scratch, format="parquet")
-    shp_records = bytearray()
-    shx_records = bytearray()
-    dbf_records = bytearray()
-    n = 0
-    minx = miny = float("inf")
-    maxx = maxy = float("-inf")
-    shape_type = None
-    offset_words = _HEADER_LEN // 2
-    # format cap bookkeeping: dbf record size is fixed per schema, so the
-    # projected .dbf size is linear in n and checkable incrementally
-    _dbf_rec_size = 1 + sum(fl for _, _, fl, _ in fields)
-    _dbf_hdr_size = 32 + 32 * len(fields) + 1
-    for rb in ds.to_batches():
-        for ri in range(rb.num_rows):
-            blob = bytearray(rb.column(0)[ri].as_py())
-            lens = np.frombuffer(rb.column(1)[ri].as_py(), dtype=">i4").astype(
-                np.int64
-            )
-            k = len(lens)
-            if k == 0:
-                continue
-            uniq = rb.column(3)[ri].as_py().split(",")
-            if shape_type is None:
-                shape_type = int(uniq[0])
-            if len(uniq) > 1 or int(uniq[0]) != shape_type:
-                shutil.rmtree(scratch)
-                raise ValueError(
-                    "shapefile cannot mix point and polygon shapes"
-                )
-            clens = lens // 2
-            # patch the global record numbers into the pre-built headers:
-            # one strided 4-byte scatter per batch, no per-record Python
-            starts = np.concatenate([[0], np.cumsum(8 + lens)[:-1]])
-            view = np.frombuffer(blob, dtype=np.uint8)
-            num_bytes = np.arange(n + 1, n + k + 1, dtype=">i4").view(
-                np.uint8
-            ).reshape(k, 4)
-            view.reshape(-1)[
-                (starts[:, None] + np.arange(4)).ravel()
-            ] = num_bytes.ravel()
-            shp_records += blob
-            sx = np.empty((k, 2), dtype=">i4")
-            sx[:, 0] = offset_words + np.concatenate(
-                [[0], np.cumsum(4 + clens)[:-1]]
-            )
-            sx[:, 1] = clens
-            shx_records += sx.tobytes()
-            offset_words += int((4 + clens).sum())
-            n += k
-            if (
-                _HEADER_LEN + len(shp_records) > SHP_MAX_BYTES
-                or _dbf_hdr_size + _dbf_rec_size * n + 1 > SHP_MAX_BYTES
-            ):
-                # fail BEFORE any final file is opened (every internal
-                # offset is signed-32 in 16-bit words): at this size the
-                # format is the wrong tool — export sharded instead
-                shutil.rmtree(scratch)
-                raise ValueError(
-                    "output exceeds the shapefile format's 2 GiB cap; use "
-                    "sharded_export (one file per quadkey shard) or "
-                    "FlatGeobuf for data this size"
-                )
-            minx = min(minx, float(rb.column(4)[ri].as_py()))
-            miny = min(miny, float(rb.column(5)[ri].as_py()))
-            maxx = max(maxx, float(rb.column(6)[ri].as_py()))
-            maxy = max(maxy, float(rb.column(7)[ri].as_py()))
-            dbf_records += rb.column(2)[ri].as_py()
-    shutil.rmtree(scratch)
-    if shape_type is None:
-        shape_type = SHP_POLYGON
-        minx = miny = maxx = maxy = 0.0
-    _assemble_shp(
-        base, shp_records, shx_records, dbf_records, fields, n, shape_type,
-        (minx, miny, maxx, maxy),
-    )
-    return n
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def read_shp(
@@ -618,6 +397,7 @@ def read_shp(
     and their .dbf rows never parsed. The format has no file-level
     spatial index — sharded exports prune whole files via the manifest's
     per-shard envelope before this record-level filter runs."""
+    from ..geo.kernels import _ring_shoelace
     from ..geo.wkt import multipolygon_wkt, point_wkt, polygon_wkt
 
     base = path[:-4] if path.endswith(".shp") else path
@@ -653,10 +433,11 @@ def read_shp(
                     buf, dtype="<f8", count=npts * 2, offset=off + 44 + 4 * nparts
                 ).reshape(-1, 2)
                 bounds = list(parts) + [npts]
+                area = _ring_shoelace(pts[:, 0], pts[:, 1], np.asarray(bounds))[0]
                 polys: list[list[np.ndarray]] = []
                 for i in range(nparts):
                     ring = pts[bounds[i] : bounds[i + 1]]
-                    if _ring_signed_area(ring[:-1] if len(ring) > 3 else ring) <= 0:
+                    if area[i] <= 0:
                         polys.append([ring])  # CW = outer
                     elif polys:
                         polys[-1].append(ring)  # CCW = hole of previous outer

@@ -15,13 +15,14 @@ files).
 Scale shape: one shuffle groups rows by ``substring(quadkey, 1, level)``
 (repartition + sortWithinPartitions, so each task walks its shards as
 contiguous quadkey-sorted runs) and a ``mapInArrow`` pass builds each
-shard's file. Arrow batches — NOT ``applyInPandas`` — carry the rows to
-the builder: Spark's pandas conversion degrades nullable int64 columns to
-float64, silently corrupting integers beyond 2^53; the explicit
-``to_pandas(types_mapper=Int64)`` here keeps them exact. A shard must fit
-in task memory — pick ``level`` so the densest shard does (the partition
-planner's histogram tells you); the shapefile builder additionally
-enforces the format's 2 GiB cap per shard.
+shard's file. The shard's Arrow batches go straight to the format's
+``write_*_shard`` builder, which runs each batch through the same batch
+encoder as the single-file writer (``encode_features``, ``shp_records``,
+``gpkg_blobs``): no pandas step, so int64 attributes stay exact beyond
+2^53, and per-batch encoding keeps int32 binary offsets sufficient. A
+shard must fit in task memory — pick ``level`` so the densest shard does
+(the partition planner's histogram tells you); the shapefile builder
+additionally enforces the format's 2 GiB cap per shard.
 """
 
 from __future__ import annotations
@@ -33,9 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _EXT = {"fgb": ".fgb", "gpkg": ".gpkg", "shp": ".shp"}
-
-
-from ..pdexact import exact_pandas as _exact_pandas
 
 
 def sharded_export(
@@ -71,23 +69,12 @@ def sharded_export(
         raise ValueError("column name _obs_shard is reserved")
 
     fields = list(df.schema.fields)
-    if fmt == "fgb":
-        columns = flatgeobuf.fgb_columns(fields, wkt_col)
-
-        def build(pdf, path):
-            return flatgeobuf.write_fgb_pandas(pdf, path, columns, wkt_col)
-
-    elif fmt == "gpkg":
-        columns = gpkg.gpkg_columns(fields, wkt_col)
-
-        def build(pdf, path):
-            return gpkg.write_gpkg_pandas(pdf, path, columns, wkt_col)
-
-    else:
-        columns = shapefile.shp_columns(fields, wkt_col)
-
-        def build(pdf, path):
-            return shapefile.write_shp_pandas(pdf, path, columns, wkt_col)
+    columns, build = {
+        "fgb": (flatgeobuf.fgb_columns, flatgeobuf.write_fgb_shard),
+        "gpkg": (gpkg.gpkg_columns, gpkg.write_gpkg_shard),
+        "shp": (shapefile.shp_columns, shapefile.write_shp_shard),
+    }[fmt]
+    columns = columns(fields, wkt_col)
 
     # reader schema, stored in the manifest so window reads (and the
     # empty-result case) get the export's exact column set/types without
@@ -142,7 +129,9 @@ def sharded_export(
     sidx = sh.columns.index("_obs_shard")
 
     def enc(batches):
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         out_rows = []
         cur = None
@@ -152,25 +141,24 @@ def sharded_export(
             nonlocal pending, cur
             if cur is None:
                 return
-            pdf = _exact_pandas(pending).drop(columns=["_obs_shard"])
             path = os.path.join(out_abs, f"{prefix}-{cur}{ext}")
-            n, env = build(pdf, path)
+            n, env = build(pending, path, columns, wkt_col)
             out_rows.append((cur, os.path.basename(path), n, env))
             pending = []
 
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cells = rb.column(sidx).to_pylist()
-            start = 0
-            for i in range(len(cells) + 1):
-                if i < len(cells) and cells[i] == cells[start]:
+            shard = rb.column(sidx)
+            # quadkey-sorted rows: one slice per run of equal shard keys
+            cut = np.nonzero(
+                pc.not_equal(shard[1:], shard[:-1]).to_numpy(zero_copy_only=False)
+            )[0] + 1
+            for a, b in zip(np.r_[0, cut], np.r_[cut, rb.num_rows]):
+                if a == b:
                     continue
-                if cur != cells[start]:
+                if cur != shard[a].as_py():
                     flush()
-                    cur = cells[start]
-                pending.append(rb.slice(start, i - start))
-                start = i
+                    cur = shard[a].as_py()
+                pending.append(rb.slice(a, b - a))
         flush()
         for cell, fname, n, env in out_rows:
             e = env if env is not None else [None] * 4

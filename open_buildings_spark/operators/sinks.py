@@ -39,25 +39,45 @@ def add_wkb_column(df: DataFrame, wkt_col: str = "wkt", out_col: str = "geometry
 
     def conv(batches):
         for rb in batches:
-            wkt = rb.column(idx).to_pandas()
-            batch = parse_wkt_batch(wkt)
-            wkb = wkb_from_batch(batch)
-            yield pa.RecordBatch.from_arrays(
-                list(rb.columns) + [pa.array(wkb, type=pa.binary())], names=names
-            )
+            wkb = wkb_from_batch(parse_wkt_batch(rb.column(idx).to_pandas()))
+            yield pa.RecordBatch.from_arrays(list(rb.columns) + [wkb], names=names)
 
     return df.mapInArrow(conv, schema)
 
 
-def geo_metadata(geometry_col: str = "geometry", bbox: list | None = None) -> dict:
+_GEOPARQUET_TYPES = {
+    1: "Point", 2: "LineString", 3: "Polygon", 4: "MultiPoint",
+    5: "MultiLineString", 6: "MultiPolygon", 7: "GeometryCollection",
+}
+
+
+def wkb_type_names(col) -> list[str]:
+    """GeoParquet 1.0 ``geometry_types`` of an Arrow WKB column: the
+    distinct type codes of its non-null values (byte order honored; ISO
+    Z codes get the " Z" suffix), in code order."""
+    from ..geo.wkt import binary_buffers
+
+    codes: set[int] = set()
+    for chunk in getattr(col, "chunks", [col]):
+        offs, data = binary_buffers(chunk)
+        at = offs[:-1][np.diff(offs) >= 5]
+        raw = data[at[:, None] + np.arange(1, 5)]
+        code = np.where(data[at] == 1, raw.view("<u4")[:, 0], raw.view(">u4")[:, 0])
+        codes.update(np.unique(code).tolist())
+    return [
+        _GEOPARQUET_TYPES[c % 1000] + (" Z" if c // 1000 in (1, 3) else "")
+        for c in sorted(codes)
+        if c % 1000 in _GEOPARQUET_TYPES
+    ]
+
+
+def geo_metadata(geometry_col: str, geometry_types: list[str]) -> dict:
     """GeoParquet 1.0 `geo` metadata dict (public spec)."""
     col = {
         "encoding": "WKB",
-        "geometry_types": ["Polygon", "MultiPolygon"],
+        "geometry_types": geometry_types,
         "crs": None,  # per spec: null means OGC:CRS84 (lon/lat)
     }
-    if bbox is not None:
-        col["bbox"] = bbox
     return {
         "version": GEOPARQUET_VERSION,
         "primary_column": geometry_col,
@@ -65,14 +85,14 @@ def geo_metadata(geometry_col: str = "geometry", bbox: list | None = None) -> di
     }
 
 
-def _rewrite_one_footer(f: str, meta_json: str, geometry_col: str) -> int:
+def _rewrite_one_footer(f: str, geometry_col: str) -> int:
     import pyarrow.parquet as pq
 
     t = pq.read_table(f)
     if geometry_col not in t.column_names:
         return 0
-    existing = t.schema.metadata or {}
-    new_meta = {**existing, b"geo": meta_json.encode()}
+    meta = geo_metadata(geometry_col, wkb_type_names(t.column(geometry_col)))
+    new_meta = {**(t.schema.metadata or {}), b"geo": json.dumps(meta).encode()}
     pq.write_table(
         t.replace_schema_metadata(new_meta),
         f + ".tmp",
@@ -97,15 +117,14 @@ def fix_geoparquet_metadata(path: str, geometry_col: str = "geometry", spark=Non
     distributed over the cluster (one task per file batch); without it,
     a driver-side loop (small fixture dirs only). Returns files rewritten."""
     files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    meta_json = json.dumps(geo_metadata(geometry_col))
     if spark is not None and files:
         sc = spark.sparkContext
         return (
             sc.parallelize(files, min(len(files), 1024))
-            .map(lambda f: _rewrite_one_footer(f, meta_json, geometry_col))
+            .map(lambda f: _rewrite_one_footer(f, geometry_col))
             .sum()
         )
-    return sum(_rewrite_one_footer(f, meta_json, geometry_col) for f in files)
+    return sum(_rewrite_one_footer(f, geometry_col) for f in files)
 
 
 def write_geoparquet(
@@ -157,7 +176,6 @@ def write_geoparquet(
     idx = in_names.index(wkt_col)
     keep_idx = [i for i, c in enumerate(in_names) if c != wkt_col]
     out_names = [in_names[i] for i in keep_idx] + ["geometry"]
-    meta = {b"geo": json.dumps(geo_metadata()).encode()}
 
     # job-unique token: taskAttemptId alone is only unique within one
     # SparkContext; append mode can see parts from earlier sessions
@@ -171,23 +189,25 @@ def write_geoparquet(
         tc = TaskContext.get()
         fname = f"part-{tc.partitionId():05d}-{tc.taskAttemptId()}-{job_token}.parquet"
         tmp = os.path.join(path, "." + fname + ".inprogress")
-        writer = None
-        n = 0
-        for rb in batches:
-            wkb = wkb_from_batch(parse_wkt_batch(rb.column(idx).to_pandas()))
-            out = pa.record_batch(
+        # the footer names the geometry types this part holds, known once
+        # every batch is encoded: the part is buffered, then written
+        outs = [
+            pa.record_batch(
                 [rb.column(i) for i in keep_idx]
-                + [pa.array(wkb, type=pa.binary())],
+                + [wkb_from_batch(parse_wkt_batch(rb.column(idx).to_pandas()))],
                 names=out_names,
             )
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    tmp, out.schema.with_metadata(meta), compression="snappy"
-                )
-            writer.write_batch(out)
-            n += out.num_rows
-        if writer is not None:
-            writer.close()
+            for rb in batches
+        ]
+        n = sum(out.num_rows for out in outs)
+        if outs:
+            types = wkb_type_names(pa.chunked_array([o.column("geometry") for o in outs]))
+            meta = {b"geo": json.dumps(geo_metadata("geometry", types)).encode()}
+            with pq.ParquetWriter(
+                tmp, outs[0].schema.with_metadata(meta), compression="snappy"
+            ) as writer:
+                for out in outs:
+                    writer.write_batch(out)
             os.replace(tmp, os.path.join(path, fname))
             yield pa.record_batch(
                 [pa.array([fname]), pa.array([n], type=pa.int64())],

@@ -17,19 +17,6 @@ def int_types_mapper():
     return {pa.int64(): pd.Int64Dtype(), pa.int32(): pd.Int32Dtype()}.get
 
 
-def exact_pandas(batches):
-    """Arrow record batches (or a Table) -> pandas with integer exactness
-    preserved."""
-    import pyarrow as pa
-
-    table = (
-        batches
-        if isinstance(batches, pa.Table)
-        else pa.Table.from_batches(list(batches))
-    )
-    return table.to_pandas(types_mapper=int_types_mapper())
-
-
 def frame_from_rows(rows, cols):
     """Row dicts -> pandas frame via per-column OBJECT series:
     ``pd.DataFrame(rows)`` would infer float64 for int columns containing
@@ -57,3 +44,15 @@ def attempt_tmp(path: str) -> str:
         os.path.dirname(os.path.abspath(path)),
         f".{os.path.basename(path)}.{os.getpid()}-{uuid.uuid4().hex[:8]}.inprogress",
     )
+
+
+def present(arr) -> np.ndarray:
+    """Non-null mask of an Arrow array. A floating NaN counts as null, as
+    it does in pandas, so the Arrow and pandas paths agree."""
+    import numpy as np
+    import pyarrow as pa
+
+    m = arr.is_valid().to_numpy(zero_copy_only=False)
+    if pa.types.is_floating(arr.type):
+        m &= ~np.isnan(arr.fill_null(0).to_numpy(zero_copy_only=False))
+    return m

@@ -250,3 +250,18 @@ def test_cli_s2_window_bad_bbox_errors(tmp_path):
 
     with _pytest.raises(SystemExit, match="order is w,s,e,n"):
         cli.main(["s2-window", "--src", str(tmp_path), "--bbox", "13,41,12,42"])
+
+
+def test_cli_mixture_int_strata_column(spark, tmp_path, capsys):
+    """`mixture` on an int strata column: the string --weights keys are
+    matched to the column's int values, so every source gets its share."""
+    from open_buildings_spark import cli
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    spark.createDataFrame(
+        [(f"d{i}", i % 2) for i in range(40)], "doc_id string, source int"
+    ).write.parquet(src)
+    cli.main(["mixture", "--src", src, "--dst", dst, "--weights", "0=0.5,1=0.5"])
+    assert "mixture of 40 rows" in capsys.readouterr().out
+    got = spark.read.parquet(dst).groupBy("source").count().collect()
+    assert sorted((r["source"], r["count"]) for r in got) == [(0, 20), (1, 20)]

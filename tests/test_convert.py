@@ -93,7 +93,7 @@ def test_wkt_wkb_roundtrip_property(pts):
     b = parse_wkt_batch(pd.Series([w]))
     assert b.gtype[0] == 3
     # WKT -> batch -> WKB -> batch preserves coordinates exactly
-    wkb = wkb_from_batch(b)[0]
+    wkb = wkb_from_batch(b)[0].as_py()
     b2 = parse_wkb_batch(pd.Series([wkb]))
     assert np.array_equal(b.coords, b2.coords)
     # and WKT re-emission round-trips through the parser

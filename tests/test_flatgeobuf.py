@@ -110,37 +110,6 @@ def test_fgb_to_df_source(spark, small_geo, tmp_path):
     assert df.filter(F.col("wkt").startswith("POLYGON")).count() > 0
 
 
-def test_fast_feature_template_matches_generic_builder():
-    """The template fast path must be byte-identical to the generic
-    builder for every shape it claims (single-ring polygon / point with
-    >=8-byte props), across coordinate counts and props lengths."""
-    import numpy as np
-
-    from open_buildings_spark.geo.wkt import GT_POINT, GT_POLYGON
-    from open_buildings_spark.operators.flatgeobuf import (
-        _encode_feature_slow,
-        _encode_properties,
-        encode_feature,
-    )
-
-    rng = np.random.default_rng(7)
-    cols = [("name", fgb.CT_STRING), ("v", fgb.CT_DOUBLE), ("n", fgb.CT_LONG)]
-    for npts in (4, 5, 7, 12, 33):
-        for sval in ("x", "somewhat-longer-name", "u" * 57):
-            ring = rng.uniform(-50, 50, size=(npts, 2))
-            row = [sval, 3.25, 42]
-            props = _encode_properties(cols, row)
-            fast = encode_feature(GT_POLYGON, [(ring, False)], cols, row)
-            slow = _encode_feature_slow(GT_POLYGON, [(ring, False)], props)
-            assert fast == slow, (npts, sval)
-    pt = rng.uniform(-50, 50, size=(1, 2))
-    row = ["p", 1.5, 7]
-    props = _encode_properties(cols, row)
-    assert encode_feature(GT_POINT, [(pt, False)], cols, row) == _encode_feature_slow(
-        GT_POINT, [(pt, False)], props
-    )
-
-
 def test_fgb_all_null_column_keeps_schema(spark, tmp_path):
     # a property column that is null in EVERY row must still appear in the
     # round-trip schema with its header-declared type
@@ -183,7 +152,12 @@ def test_fgb_reader_tolerates_external_column_types(tmp_path):
     props += struct.pack("<HI", 3, len(dt)) + dt
     js = b'{"k":1}'
     props += struct.pack("<HI", 4, len(js)) + js
-    feat = fgb._encode_feature_slow(fgb.GT_POLYGON, [(ring, False)], bytes(props))
+    import pyarrow as pa
+
+    from open_buildings_spark.geo.wkt import parse_wkt_batch, polygon_wkt
+
+    batch = parse_wkt_batch(pd.Series([polygon_wkt([ring])]))
+    feat = fgb.encode_features(batch, pa.array([bytes(props)], pa.binary()))[0].as_py()
     header = fgb.encode_header("t", (0.0, 0.0, 1.0, 1.0), fgb.GT_POLYGON, cols, 1)
     path = str(tmp_path / "ext.fgb")
     with open(path, "wb") as f:

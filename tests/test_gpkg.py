@@ -239,19 +239,24 @@ def _bbox_hits(wkt: str, win) -> bool:
 
 
 def test_gp_headers_np_byte_identical():
-    """The vectorized executor-side header builder must equal the scalar
-    spec encoder byte-for-byte (it ships inside the GeoPackageBinary
-    blobs now)."""
+    """The GeoPackageBinary header (OGC 12-128r19 2.1.3) decoded field by
+    field: magic 'GP', version 0, flags = little-endian + envelope
+    indicator 1, srs_id, then the envelope as minx, maxx, miny, maxy."""
     import numpy as np
 
-    from open_buildings_spark.operators.gpkg import gp_header, gp_headers_np
+    from open_buildings_spark.operators.gpkg import gp_headers_np
 
     rng = np.random.RandomState(3)
     bb = rng.uniform(-180, 180, (500, 4))
     bb = np.concatenate([bb, [[0.0, -0.0, np.float64(1e-300), 180.0]]])
-    h = gp_headers_np(4326, bb)
+    raw = gp_headers_np(4326, bb).tobytes()
+    assert len(raw) == 40 * len(bb)
     for i in range(len(bb)):
-        assert h[i].tobytes() == gp_header(4326, tuple(bb[i]))
+        magic, ver, flags, srs, *env = struct.unpack_from("<2sBBi4d", raw, 40 * i)
+        assert (magic, ver, flags, srs) == (b"GP", 0, 0b011, 4326)
+        got = np.array(env).view(np.uint64)
+        want = bb[i, [0, 2, 1, 3]].view(np.uint64)  # bit-exact, -0.0 included
+        assert (got == want).all()
 
 
 def test_insert_error_stops_prefetch_thread(spark, small_geo, tmp_path, monkeypatch):
@@ -275,3 +280,15 @@ def test_insert_error_stops_prefetch_thread(spark, small_geo, tmp_path, monkeypa
 
     assert not [t for t in threading.enumerate() if prefetch_of_write_gpkg(t)]
     assert sorted(os.listdir(tmp_path)) == []
+
+
+def test_bulk_insert_respects_connection_variable_limit():
+    """Multi-row INSERTs are sized from the connection's own bound-
+    parameter cap: at SQLite's old default of 999, 1,000 four-column rows
+    must still insert."""
+    db = sqlite3.connect(":memory:")
+    db.setlimit(sqlite3.SQLITE_LIMIT_VARIABLE_NUMBER, 999)
+    db.execute("CREATE TABLE t (a, b, c, d)")
+    rows = [(i, str(i), float(i), None) for i in range(1000)]
+    gpkg._bulk_insert(db, "INTO t (a, b, c, d)", rows)
+    assert db.execute("SELECT * FROM t ORDER BY a").fetchall() == rows

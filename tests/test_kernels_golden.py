@@ -11,8 +11,8 @@ from open_buildings_spark.geo.wkt import (
     multipolygon_wkt,
     parse_wkb_batch,
     parse_wkt_batch,
-    polygon_wkb,
     polygon_wkt,
+    wkb_from_batch,
 )
 from tests.fixtures import (
     GLOBAL_STRADDLE_AOI,
@@ -104,8 +104,8 @@ def test_wkt_parse_nulls_and_mixed():
 def test_wkb_roundtrip():
     shell = [[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]]
     hole = [[1, 1], [2, 1], [2, 2], [1, 2], [1, 1]]
-    buf = polygon_wkb([shell, hole])
-    b = parse_wkb_batch(pd.Series([buf]))
+    buf = wkb_from_batch(parse_wkt_batch(pd.Series([polygon_wkt([shell, hole])])))
+    b = parse_wkb_batch(pd.Series(buf.to_pylist()))
     assert b.gtype[0] == 3
     assert b.n_rings == 2
     assert bool(b.ring_is_hole[1])

@@ -555,3 +555,31 @@ def test_sharded_shp_truncated_names_and_gpkg_bool(spark, tmp_path):
     exp = {r["doc_id"]: r["flag_even_len"] for r in g.collect()}
     assert got == exp
     assert dict(back2.dtypes)["flag_even_len"] == "boolean"
+
+
+def test_geoparquet_footers_name_emitted_types(spark, tmp_path):
+    """Each GeoParquet part's footer lists the GeoParquet names of the
+    geometry types its rows hold; fix_geoparquet_metadata derives the same
+    names from the WKB it reads back."""
+    import glob
+
+    wkts = [
+        "POINT (1 2)", "POINT (3 4)",  # first partition: points only
+        "POLYGON ((0 0, 1 0, 1 1, 0 0))", "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)))",
+    ]
+    df = spark.createDataFrame(spark.sparkContext.parallelize([(w,) for w in wkts], 2), "wkt string")
+    path = str(tmp_path / "gpq")
+    assert sinks.write_geoparquet(df, path) == 2
+
+    def footers():
+        return sorted(
+            json.loads(pq.read_schema(f).metadata[b"geo"])["columns"]["geometry"]["geometry_types"]
+            for f in glob.glob(f"{path}/*.parquet")
+        )
+
+    want = [["Point"], ["Polygon", "MultiPolygon"]]
+    assert footers() == want
+    for f in glob.glob(f"{path}/*.parquet"):
+        pq.write_table(pq.read_table(f).replace_schema_metadata(None), f)
+    assert sinks.fix_geoparquet_metadata(path) == 2
+    assert footers() == want
